@@ -6,9 +6,9 @@ Usage, from the repository root:
 
 ``--workload`` is ``chart_day`` or ``faces`` (see perfbench/README.md).
 The run starts one Spark session on ``local[<cpus>]``, builds the
-workload's inputs from ``--seed`` (several times, to time set-up), then
-runs operations back to back, timing each, until at least ``--seconds``
-of operation time have passed and a whole group of operations is done.
+workload's inputs from ``--seed``, then runs operations back to back,
+timing each, until at least ``--seconds`` of operation time have passed
+and a whole group of operations is done.
 Each operation's output is checked against an independent reference
 outside the timed region. The last line of standard output is one JSON
 object: ``correct``, ``attempted``, ``failed`` and ``metrics``. With
@@ -44,10 +44,11 @@ from workloads import FACES, WORKLOADS  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_REPS = 2
-#: driver heap, fixed from the start (-Xms) so resident memory does not
-#: depend on when the collector chose to grow the heap
-DRIVER_MEM = "2g"
+#: driver heap: it starts at HEAP_FLOOR (-Xms), so that collection work does
+#: not depend on when the collector chose to grow the heap, and may grow to
+#: DRIVER_MEM when what the session keeps does not fit
+HEAP_FLOOR = "2g"
+DRIVER_MEM = "4g"
 #: stop starting operations past this point, whatever --seconds says
 HARD_STOP_S = 140.0
 
@@ -96,7 +97,7 @@ def start_session(work: str, trace: bool):
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     conf = {
-        "spark.driver.extraJavaOptions": f"-XX:ReservedCodeCacheSize=512m -Xms{DRIVER_MEM} -Djava.io.tmpdir={tmp}",
+        "spark.driver.extraJavaOptions": f"-XX:ReservedCodeCacheSize=512m -Xms{HEAP_FLOOR} -Djava.io.tmpdir={tmp}",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
     }
@@ -159,7 +160,8 @@ def install_spans(tracer, meter_root: str, modules) -> None:
     def commit_tables(self, *args, **kwargs):
         with tracer.span("catalog.commit_tables"):
             out = commit(self, *args, **kwargs)
-        written, linked, nbytes = meter.delta()
+        with tracer.untimed():  # the walk is not the caller's time
+            written, linked, nbytes = meter.delta()
         tracer.extra["catalog.commit_tables.files_written"] += written
         tracer.extra["catalog.commit_tables.files_linked"] += linked
         tracer.extra["catalog.commit_tables.bytes_written"] += nbytes
@@ -238,6 +240,7 @@ def run(args, spec: dict, work: str, workload_cls) -> dict:
         stop_session(spark)
     e2e, summary, tracer, selftest, pins = out
     errors = summary["errors"]
+    summary["end_to_end"] = e2e
     if summary["warm_error"]:
         errors.append(f"set-up: {summary['warm_error']}")
     if tracer:
@@ -247,7 +250,6 @@ def run(args, spec: dict, work: str, workload_cls) -> dict:
             errors.append(f"event-log self-test: log says {st.get('jobs')} jobs/{st.get('tasks')} tasks, "
                           f"status tracker says {selftest[0]}/{selftest[1]}")
         layers["pins"] = {"live_rdds": max(p[0] for p in pins), "pinned_bytes": max(p[1] for p in pins)}
-        summary["traced_end_to_end"] = e2e
         summary["selftest_jobs_tasks"] = list(selftest)
         summary["layers"] = {k: {c: round(v, 4) for c, v in row.items() if v} for k, row in sorted(layers.items())}
         metrics = {}
@@ -271,11 +273,9 @@ def measure(args, spark, work: str, workload_cls):
     warm_up(spark, arrow=workload_cls.name == "faces")
     session_s = time.perf_counter() - T0
     wl = workload_cls(spark, work, args.seed, tracer)
-    reps = []
-    for _ in range(SETUP_REPS):
-        t = time.perf_counter()
-        wl.setup()
-        reps.append(time.perf_counter() - t)
+    t = time.perf_counter()
+    wl.setup()
+    prep_s = time.perf_counter() - t
     t = time.perf_counter()
     warm_error = wl.warm()
     warm_s = time.perf_counter() - t
@@ -336,11 +336,11 @@ def measure(args, spark, work: str, workload_cls):
         "ops_per_min": 60.0 * len(latencies) / timed,
         "cpu_s_per_op": cpu / len(latencies),
         "peak_rss_mb": peak_rss_mb(sc),
-        "setup_s": session_s + statistics.median(reps) + warm_s,
+        "setup_s": session_s + prep_s + warm_s,
     }
     summary = {
         "workload": wl.name, "seed": args.seed, "ops": len(latencies), "failed": len(errors),
-        "op_latencies_s": [round(x, 4) for x in latencies], "setup_reps_s": [round(x, 4) for x in reps],
+        "op_latencies_s": [round(x, 4) for x in latencies], "prep_s": round(prep_s, 4),
         "session_s": round(session_s, 4), "warm_s": round(warm_s, 4), "warm_error": warm_error,
         "errors": errors,
     }

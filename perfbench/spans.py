@@ -11,7 +11,9 @@ has stopped and flushed its log.
 Counters are *self* counters: a job belongs to the innermost span that
 was open when it started, never to that span's parents. ``wall_s`` is a
 span's whole duration and ``self_s`` its duration minus the time its
-child spans cover. Spans are recorded only while ``active`` is set, so
+child spans cover. Time the benchmark spends on its own bookkeeping
+inside a span (:meth:`Tracer.untimed`) counts in neither. Spans are
+recorded only while ``active`` is set, so
 set-up and the untimed checks between operations are left out; their
 jobs carry no job group and are not counted.
 """
@@ -36,6 +38,7 @@ class Tracer:
         self.sc = sc
         self.spans: list[dict] = []  # id, name, parent, t0, t1
         self.stack: list[dict] = []
+        self.untimed_spans: list[tuple[float, float]] = []  # bookkeeping, see untimed()
         self.extra: dict[str, float] = defaultdict(float)  # layer-specific counters
         self.active = False
 
@@ -47,6 +50,17 @@ class Tracer:
 
     def span(self, name: str):
         return _Span(self, name) if self.active else contextlib.nullcontext()
+
+    @contextlib.contextmanager
+    def untimed(self):
+        """Bookkeeping of the benchmark's own: its time is taken out of the
+        ``wall_s`` and ``self_s`` of every span open around it."""
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            if self.active:
+                self.untimed_spans.append((t0, time.perf_counter()))
 
     def wrap(self, owner, attr: str, name: str) -> None:
         """Replace ``owner.attr`` with a version that records a span per call."""
@@ -69,9 +83,9 @@ class Tracer:
                 children[s["parent"]].append((s["t0"], s["t1"]))
         for s in self.spans:
             row = out[s["name"]]
-            wall = s["t1"] - s["t0"]
-            row["wall_s"] += wall
-            row["self_s"] += wall - _covered(children[s["id"]])
+            inside = [(a, b) for a, b in self.untimed_spans if s["t0"] <= a and b <= s["t1"]]
+            row["wall_s"] += s["t1"] - s["t0"] - _covered(inside)
+            row["self_s"] += s["t1"] - s["t0"] - _covered(children[s["id"]] + inside)
             row["calls"] += 1
         for group, counts in read_event_log(event_log).items():
             if group not in by_id:

@@ -1,8 +1,8 @@
 """The two workloads: ``chart_day`` (the daily ETL) and ``faces`` (registry faces).
 
-Each workload object has ``setup()``, which builds its inputs and may be
-called several times (the last call's inputs are used); ``warm()``, the
-rest of the set-up, run once; ``ops()``, which yields ``(label, op)``
+Each workload object has ``setup()``, which builds its inputs, and
+``warm()``, the rest of the set-up, which returns an error string or
+``None``; ``ops()``, which yields ``(label, op)``
 pairs, one zero-argument callable per timed operation, in a fixed order
 without end (the runner stops after whole groups of ``pass_len``); and
 ``check(i)``, which compares op ``i``'s output with an independent
@@ -20,7 +20,6 @@ import shutil
 from decimal import Decimal
 
 import chart
-import datagen
 
 HISTORY_END = dt.date(2025, 6, 30)
 #: a little over a year of daily charts: the first batch after it (set-up)
@@ -42,7 +41,12 @@ FACES = {
     "ann_index_build": "extensions.ann_index",
     "sketch_stream_state": "streaming.sketch_stream",
 }
-FACE_SF = 0.01
+#: the registry's sf0.01 tables, the data the oracle suite checks the faces on
+FACE_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.01")
+FACE_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
 
 
 def _nospan(_name):
@@ -68,7 +72,6 @@ class ChartDay:
         self.batch_schema = T.StructType(
             schemas.DAILY_BATCH.fields + [T.StructField("batch_date", T.DateType(), False)]
         )
-        self.reps = 0
         self.results: dict[int, tuple] = {}
 
     def setup(self) -> None:
@@ -77,10 +80,7 @@ class ChartDay:
         from daily_top_songs_etl_spark.operators.matview import PartitionedIncrementalView
 
         spark = self.spark
-        if self.reps:
-            shutil.rmtree(self.root, ignore_errors=True)
-        self.reps += 1
-        self.root = os.path.join(self.work, f"catalog{self.reps}")
+        self.root = os.path.join(self.work, "catalog")
         self.gen = chart.ChartGenerator(self.seed)
         self.model = chart.ChartModel()
         rows = []
@@ -224,27 +224,32 @@ class Faces:
         self.entry = entry
         self.registry = entry.queries()
         self.oracles = entry.oracle_sql()
-        self.reps = 0
         self.results: dict[int, tuple] = {}
         self.n_ops = 0
 
     def setup(self) -> None:
         import duckdb
 
-        self.reps += 1
-        self.sf_dir = os.path.join(self.work, f"data{self.reps}", f"sf{FACE_SF}")
-        datagen.generate(self.sf_dir, FACE_SF, self.seed)
-        for t in datagen.TABLES:  # the one-time layout split, outside the ops
+        # a private copy, so that the engine's layout split is made afresh
+        self.sf_dir = os.path.join(self.work, "data", "sf0.01")
+        shutil.copytree(FACE_DATA, self.sf_dir)
+        for t in FACE_TABLES:  # the one-time layout split, outside the ops
             self.entry._t(self.spark, self.sf_dir, t).selectExpr("count(*)").collect()
         self.duck = duckdb.connect()
         self.duck.execute("SET threads=1")
         self.duck.execute(f"SET temp_directory='{os.path.join(self.work, 'duckdb')}'")
-        for t in datagen.TABLES:
+        for t in FACE_TABLES:
             self.duck.execute(f"CREATE VIEW {t} AS SELECT * FROM '{self.sf_dir}/{t}.parquet'")
 
     pass_len = len(FACES)  # a pass runs every face once, in FACES order
 
-    def warm(self) -> None:
+    def warm(self) -> str | None:
+        """Scan and shuffle every table once more, so that the session's
+        scan, exchange and write paths are compiled before the first face."""
+        n = self.spark.sparkContext.defaultParallelism
+        for t in FACE_TABLES:
+            df = self.entry._t(self.spark, self.sf_dir, t)
+            df.repartition(n).write.mode("overwrite").parquet(os.path.join(self.work, "warm", t))
         return None
 
     def ops(self):
@@ -275,11 +280,15 @@ class Faces:
         return None
 
     def after_op(self) -> None:
-        """Between-face hygiene, as the registry sweep does it."""
+        """Between-face hygiene, as the registry sweep does it; the catalog's
+        pending deletions also finish here, not during the next face."""
+        from daily_top_songs_etl_spark.catalog import flush_trash
+
         sc = self.spark.sparkContext
         self.spark.catalog.clearCache()
         for rdd in sc._jsc.getPersistentRDDs().values():
             rdd.unpersist()
+        flush_trash()
         self.n_ops += 1
         if self.n_ops % 5 == 0:
             sc._jvm.System.gc()
