@@ -37,6 +37,22 @@ class Tables:
     ranking: DataFrame
 
 
+def retention_cutoff(new_max_date: dt.date) -> dt.date:
+    """T1's purge bound: rows dated on or before it go.
+
+    ``NEW.ranking_date - INTERVAL '1 year'`` with Spark's
+    ``add_months(d, -12)`` semantics, which Postgres shares: the day of
+    month is kept and clamped to the target month's end, so Feb 29 maps
+    to Feb 28 of the year before, and Feb 28 maps to Feb 28 (a month's
+    last day is not kept as last day). Computed on the driver, so the
+    daily commit lists the partitions to drop without a Spark job; the
+    T1 filter below uses the same value."""
+    try:
+        return new_max_date.replace(year=new_max_date.year - 1)
+    except ValueError:  # Feb 29 in a leap year
+        return new_max_date.replace(year=new_max_date.year - 1, day=28)
+
+
 def maintain(
     tables: Tables,
     new_max_date: dt.date | None = None,
@@ -88,9 +104,9 @@ def maintain(
     ranking = tables.ranking
     if new_max_date is not None:
         # T1: ranking_date <= NEW.ranking_date - INTERVAL '1 year' is purged
-        # (keep-side rewrite; interval-year arithmetic = add_months -12).
-        cutoff = F.add_months(F.lit(new_max_date), -12)
-        ranking = ranking.filter(F.col("ranking_date") > cutoff)
+        # (keep-side rewrite against a literal cutoff).
+        cutoff = retention_cutoff(new_max_date)
+        ranking = ranking.filter(F.col("ranking_date") > F.lit(cutoff))
 
     # T2: songs must still be referenced by some ranking row. The build
     # side (distinct charted isrcs) is bounded by the domain — 10 ranks ×

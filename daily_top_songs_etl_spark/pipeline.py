@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .pins import release_new_pins, snapshot_pins
-from .operators.maintain import Tables, maintain
+from .operators.maintain import Tables, maintain, retention_cutoff
 from .operators.topk import assign_positional_ranks
 from .operators.upsert import merge_song, upsert
 from .operators.validate import validate_ranking
@@ -97,10 +97,16 @@ def run_daily_batch(
     )
     ranking_res = upsert(ranking_t, ranking_batch, ["isrc", "ranking_date", "ranking_source"])
 
-    # Pin the batch-sized RETURNING set once: the max-date probe, the
-    # touched-date listing, and the fact union all consume it, and each
+    # Pin the batch-sized RETURNING set once: the date listing, the fact
+    # union, the mirror and the staged write all consume it, and each
     # would otherwise re-run the anti-join against the full fact table.
     ranking_ins = ranking_res.inserted.localCheckpoint(eager=True)
+    # One collect of the inserted dates (one value per touched day, never
+    # NULL after validate_ranking) serves both the trigger's
+    # NEW.ranking_date and the commit's touched partitions.
+    inserted_dates = [
+        r[0] for r in ranking_ins.select("ranking_date").distinct().collect()
+    ]
     # Snapshot the persisted-RDD ids AFTER the (kept) ranking pin and
     # BEFORE maintain()'s dimension pins: DataFrame.unpersist() is a
     # no-op for localCheckpoint blocks (it only clears CacheManager
@@ -113,8 +119,7 @@ def run_daily_batch(
     # Trigger cascade (T1→T2→T3) relative to the batch's max date.
     # materialize=True pins each GC'd dimension so the cascade (and the
     # fact distinct feeding it) runs once, not once per consumer below.
-    max_date_row = ranking_ins.agg(F.max("ranking_date")).first()
-    new_max_date = max_date_row[0] if max_date_row else None
+    new_max_date = max(inserted_dates, default=None)
     tables = maintain(
         Tables(
             artist=artist_res.table,
@@ -178,7 +183,7 @@ def run_daily_batch(
         # the serialization the reference gets from Postgres row locks).
         with catalog.writer_lock():
             return _commit_batch(
-                catalog, tables, deltas, ranking_t, ranking_ins, new_max_date
+                catalog, tables, deltas, inserted_dates, new_max_date
             )
     finally:
         # Release the dimension pins (their data is committed to parquet;
@@ -189,10 +194,12 @@ def run_daily_batch(
         release_new_pins(sc, pre_pin_ids, "run_daily_batch")
 
 
-def _commit_batch(catalog, tables, deltas, ranking_t, ranking_ins, new_max_date):
+def _commit_batch(catalog, tables, deltas, inserted_dates, new_max_date):
     """The snapshot-consistent publication tail of :func:`run_daily_batch`
     (runs under the caller's held writer lock — the nested catalog calls
-    below re-enter it)."""
+    below re-enter it). The partition bookkeeping is driver metadata:
+    the touched dates come from the caller's one collect, and the purged
+    dates from the snapshot's ``ranking_date=`` directory names."""
     dims = {
         "artist": tables.artist,
         "song": tables.song,
@@ -201,24 +208,10 @@ def _commit_batch(catalog, tables, deltas, ranking_t, ranking_ins, new_max_date)
     if not catalog.exists("ranking"):
         catalog.commit_tables({**dims, "ranking": tables.ranking})
         return deltas
-    spark = ranking_ins.sparkSession
-    inserted_dates = [
-        r[0]
-        for r in ranking_ins.select("ranking_date").distinct().collect()
-    ]  # bounded: one value per touched day
     if new_max_date is not None:
-        cutoff = (
-            spark.createDataFrame([(new_max_date,)], "d date")
-            .select(F.add_months("d", -12).alias("c"))
-            .first()[0]
-        )
-        purged = [
-            r[0]
-            for r in ranking_t.select("ranking_date")
-            .distinct()
-            .filter(F.col("ranking_date") <= F.lit(cutoff))
-            .collect()
-        ]  # partition metadata, bounded by retained dates
+        # the same cutoff maintain()'s T1 filter applied
+        cutoff = retention_cutoff(new_max_date)
+        purged = [d for d in catalog.partition_values("ranking") if d <= cutoff]
         touched = [d for d in inserted_dates if d > cutoff]
     else:
         purged, touched = [], inserted_dates

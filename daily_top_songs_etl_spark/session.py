@@ -15,6 +15,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Partition discovery never launches a Spark listing job (see get_spark).
+SERIAL_PARTITION_DISCOVERY = str(2**31 - 1)
 
 
 def get_spark(
@@ -47,6 +49,20 @@ def get_spark(
         # Parquet writers emit dates/timestamps readable by external tools
         # (DuckDB oracle, the reference's consumers).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # Partition discovery is a driver-side listing. Above the
+        # threshold (default 32 paths) Spark lists directories with a
+        # distributed job, one task per path: a read of the 365-date
+        # ranking snapshot cost 1.7-1.9 s that way and 0.08 s serially.
+        # The catalog backend is single-node POSIX (hardlinked file
+        # reuse, a pid writer lock), so a listing job only spreads
+        # readdir calls on one local directory over executor threads.
+        # Sessions not built here (tools/driver_sim.py, tools/gen_sfx.py)
+        # keep Spark's default. An object-store backend would serve the
+        # file list from a manifest instead of listing directories.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            SERIAL_PARTITION_DISCOVERY,
+        )
         # local[32] puts driver and all 32 executor threads in ONE JVM; an
         # undersized heap turns long sessions (the 110-query bench) into a
         # full-GC crawl. 32g on the 128 GiB test box; on a real cluster this

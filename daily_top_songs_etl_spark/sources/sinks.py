@@ -19,6 +19,10 @@ reference relies on).
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -61,8 +65,27 @@ def write_csv_mirror(
 
     Mirrors are tiny (≤20 rows/day), so a single output file keeps the
     artifact a plain appendable log like the reference's git-tracked CSVs.
+
+    An empty delta (a replayed day, a day with no new artist) leaves a
+    local mirror directory as it was: Spark's text writer still emits a
+    zero-byte part file and its ``.crc`` for an empty input, so the
+    files this call added are compared after the write and the empty
+    ones removed — a listing, not a second Spark job.
     """
+    before = set(os.listdir(path)) if os.path.isdir(path) else None
     csv_mirror_lines(df, columns).coalesce(1).write.mode(mode).text(path)
+    if not os.path.isdir(path):
+        return  # not a local directory: nothing to tidy
+    added = set(os.listdir(path)) - (before or set())
+    parts = [n for n in added if n.startswith("part-")]
+    if parts and all(os.path.getsize(os.path.join(path, n)) == 0 for n in parts):
+        if before is None:
+            shutil.rmtree(path)  # this empty append created the directory
+            return
+        for n in parts:
+            for f in (n, f".{n}.crc"):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(path, f))
 
 
 def header_line(columns: list[str]) -> str:

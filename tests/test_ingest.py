@@ -248,6 +248,7 @@ def test_dual_source_pipeline_end_to_end(spark, tmp_path, monkeypatch):
     etl_pipeline.py:985-997) and the 20-row per-source positional ranks
     (load_ranking_data's half-split, etl_pipeline.py:843-850)."""
     import datetime as dt
+    import os
 
     from pyspark.sql import functions as F
 
@@ -298,7 +299,21 @@ def test_dual_source_pipeline_end_to_end(spark, tmp_path, monkeypatch):
     assert combined.count() == 20
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    run_daily_batch(cat, combined)
+    mirror = str(tmp_path / "mirror")
+    run_daily_batch(cat, combined, mirror)
+
+    # the replayed batch inserts nothing, and its empty CSV mirror
+    # appends leave every mirror directory's file list unchanged
+    def mirror_files():
+        return {
+            d: sorted(os.listdir(os.path.join(mirror, d)))
+            for d in os.listdir(mirror)
+        }
+
+    first = mirror_files()
+    assert set(first) == {"artist", "song", "artist_song_map", "ranking"}
+    run_daily_batch(cat, combined, mirror)
+    assert mirror_files() == first
 
     # per-source positional ranks: 10 each, rank exactly 1..10 per source
     ranking = cat.read("ranking").collect()

@@ -10,7 +10,11 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from daily_top_songs_etl_spark import schemas
-from daily_top_songs_etl_spark.operators.maintain import Tables, maintain
+from daily_top_songs_etl_spark.operators.maintain import (
+    Tables,
+    maintain,
+    retention_cutoff,
+)
 from daily_top_songs_etl_spark.operators.upsert import (
     merge_song,
     priority_dedup,
@@ -127,6 +131,22 @@ def test_maintain_cascade_order(spark):
     )
     out2 = maintain(Tables(artist, song, amap, boundary), new_max_date=today)
     assert [r.isrc for r in out2.ranking.collect()] == ["NEWI00000001"]
+
+
+@pytest.mark.parametrize(
+    "day",
+    [
+        dt.date(2024, 2, 29),
+        dt.date(2024, 3, 1),
+        dt.date(2025, 2, 28),
+        dt.date(2024, 12, 31),
+    ],
+)
+def test_retention_cutoff_matches_spark_add_months(spark, day):
+    """The driver-side T1 cutoff is Spark's add_months(d, -12), leap
+    days included (Feb 29 → Feb 28; Feb 28 stays Feb 28)."""
+    [row] = spark.sql(f"SELECT add_months(date'{day}', -12) AS c").collect()
+    assert retention_cutoff(day) == row.c
 
 
 def test_csv_mirror_dialect(spark):
@@ -2095,6 +2115,8 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
     type + position + nullability), same rows — and must DECLINE
     (return None → real inference) on any class outside the replica:
     that is what makes the optimization drift-proof."""
+    import os
+
     from daily_top_songs_etl_spark.catalog import Catalog
 
     cases = {
@@ -2115,6 +2137,9 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
             df = df.select("k", F.col("p").cast("date").alias("p"))
         cat.write(df, name, partition_by=["p"])
         p = cat.path(name)
+        # hidden entries (``_meta.json``, ``_SUCCESS``, ``.crc`` files
+        # and this leftover dir) are skipped by Spark and the parser alike
+        os.makedirs(os.path.join(p, "_trash-leftover"))
         sidecar = cat._sidecar_schema(p)
         assert sidecar is not None, f"{name}: sidecar path must engage"
         inferred = spark.read.parquet(p)
@@ -2126,6 +2151,10 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
         assert sorted(map(str, via_sidecar.collect())) == sorted(
             map(str, inferred.collect())
         ), name
+        # the driver-side partition parser agrees with a Spark distinct
+        assert cat.partition_values(name) == sorted(
+            r.p for r in inferred.select("p").distinct().collect()
+        ), name
         # term_mod-style check: a BIGINT-written small-int partition col
         # must read back as INT (the inference round-trip), not BIGINT
         if name == "smallint":
@@ -2134,12 +2163,15 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
     floats = spark.createDataFrame([(1, 1.5), (2, 2.5)], "k long, p double")
     cat.write(floats, "floats", partition_by=["p"])
     assert cat._sidecar_schema(cat.path("floats")) is None
+    with pytest.raises(ValueError):
+        cat.partition_values("floats")  # outside the parsed classes
     # NULL partition keys (__HIVE_DEFAULT_PARTITION__) decline too
     nulls = spark.createDataFrame(
         [(1, "x"), (2, None)], "k long, p string"
     )
     cat.write(nulls, "nulls", partition_by=["p"])
     assert cat._sidecar_schema(cat.path("nulls")) is None
+    assert cat.partition_values("nulls") == [None, "x"]
     # mixed classes decline
     mixed = spark.createDataFrame(
         [(1, "7"), (2, "us")], "k long, p string"
@@ -2149,3 +2181,62 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
     # and cat.read still serves every declined table (via inference)
     for t in ("floats", "nulls", "mixed"):
         assert cat.read(t).count() == 2
+
+
+def test_catalog_read_of_many_date_partitions_starts_no_job(spark, tmp_path):
+    """On a get_spark session, partition discovery is a driver-side
+    listing: reading a 120-date ranking snapshot starts no Spark job
+    (Spark's default lists more than 32 paths with a distributed job)."""
+    from daily_top_songs_etl_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    history = spark.range(120).select(
+        F.lit("ISRC00000001").alias("isrc"),
+        F.date_add(F.lit(dt.date(2024, 1, 1)), F.col("id").cast("int")).alias(
+            "ranking_date"
+        ),
+        F.lit(1).alias("rank"),
+        F.lit("Spotify").alias("ranking_source"),
+    )
+    cat.write(history, "ranking")
+    sc = spark.sparkContext
+    group = "test-catalog-read-listing"
+    sc.setJobGroup(group, "catalog.read of 120 date partitions")
+    try:
+        ranking = cat.read("ranking")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert ranking.count() == 120  # the group does see real jobs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+
+
+@pytest.mark.parametrize("how", ["append", "append_once", "append_once_files"])
+def test_in_place_append_widening_partition_type_refreshes_schema(
+    spark, tmp_path, how
+):
+    """An in-place append that adds a partition value past int32 widens
+    the inferred partition type to BIGINT; the next read must not replay
+    the INT schema cached by the read before it."""
+    from daily_top_songs_etl_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    schema = "v long, k long"
+    cat.write(spark.createDataFrame([(1, 1), (2, 2)], schema), "t", partition_by=["k"])
+    assert dict(cat.read("t").dtypes)["k"] == "int"  # cached here
+    wide = spark.createDataFrame([(3, 3_000_000_000)], schema)
+    if how == "append":
+        cat.append(wide, "t", partition_by=["k"])
+    elif how == "append_once":
+        cat.append_once(wide, "t", batch_id=7, partition_by=["k"])
+    else:
+        cat.write(wide, "src", partition_by=["k"])
+        cat.append_once_files("t", cat.path("src"), batch_id=7)
+    out = cat.read("t")
+    assert dict(out.dtypes)["k"] == "bigint"
+    assert sorted((r.v, r.k) for r in out.collect()) == [
+        (1, 1),
+        (2, 2),
+        (3, 3_000_000_000),
+    ]

@@ -321,6 +321,67 @@ def test_multi_day_replay_matches_reference_model(
     assert got_ranking == m_ranking
 
 
+def _chart_row(day: dt.date, n: int) -> tuple:
+    isrc = f"ZZLEAP{n:06d}"
+    return (
+        0,
+        "Spotify",
+        isrc,
+        [{"artist_id": f"ARTLEAP{n:015d}", "artist_name": f"Artist {n}"}],
+        f"Song {n}",
+        120000,
+        False,
+        f"https://open.spotify.com/track/leap{n}",
+        None,
+        day,
+    )
+
+
+def test_leap_day_purge_matches_spark_probe(spark, tmp_path):
+    """Two daily batches across a leap-day cutoff drop exactly the date
+    partitions the Spark probe (distinct dates <= add_months(max, -12))
+    names, and write only the batch's own date."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    history = [dt.date(2023, 2, 26) + dt.timedelta(days=i) for i in range(5)]
+    history.append(dt.date(2023, 9, 1))
+    seed = spark.createDataFrame(
+        [_chart_row(d, i) for i, d in enumerate(history)], LANDING_SCHEMA
+    )
+    run_daily_batch(cat, seed)
+    expected = {
+        dt.date(2024, 2, 29): set(history[:3]),  # cutoff 2023-02-28
+        dt.date(2024, 3, 1): {history[3]},  # cutoff 2023-03-01
+    }
+    for n, (day, purged) in enumerate(expected.items(), start=100):
+        probe = {
+            r[0]
+            for r in cat.read("ranking")
+            .select("ranking_date")
+            .distinct()
+            .filter(F.col("ranking_date") <= F.add_months(F.lit(day), -12))
+            .collect()
+        }
+        assert probe == purged
+        before = set(os.listdir(cat.path("ranking")))
+        run_daily_batch(
+            cat, spark.createDataFrame([_chart_row(day, n)], LANDING_SCHEMA)
+        )
+        after = set(os.listdir(cat.path("ranking")))
+        assert before - after == {f"ranking_date={d}" for d in probe}
+        assert after - before == {f"ranking_date={day}"}
+    assert cat.partition_values("ranking") == [
+        history[4],
+        history[5],
+        *expected,
+    ]
+    # T2/T3 followed the purge: only the charted songs remain
+    assert {r.isrc for r in cat.read("song").collect()} == {
+        r.isrc for r in cat.read("ranking").collect()
+    }
+
+
 @settings(
     max_examples=5,
     deadline=None,

@@ -22,8 +22,11 @@ that scales this fact table.
 Usage:
   python tools/maintain_replay_bench.py [R ...]   # default: 1 10
 
-Prints one JSON line per R with per-day walls and the model verdict;
-results are hand-merged into BENCH_sf1.json (maintain_replay_round9).
+Prints one JSON line per R with per-day walls, per-day Spark job and
+completed-task counts (one job group per replayed day, read from the
+status tracker, so a listing or re-scan regression shows as a count)
+and the model verdict; results are hand-merged into BENCH_sf1.json
+(maintain_replay_round9).
 """
 from __future__ import annotations
 
@@ -101,6 +104,20 @@ def _grid(spark, replicas: int):
     return ranking, song, artist, amap
 
 
+def _job_counts(sc, group: str) -> tuple[int, int]:
+    """(jobs, completed tasks) Spark ran under one job group."""
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    tasks = 0
+    for jid in jobs:
+        info = st.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            stage = st.getStageInfo(sid)
+            if stage is not None:
+                tasks += stage.numCompletedTasks
+    return len(jobs), tasks
+
+
 def _batch_rows(day: dt.date):
     """One replay day's landing batch: both sources post a fresh top-10
     of never-seen songs (LANDING_SCHEMA rows)."""
@@ -138,7 +155,8 @@ def main() -> int:
     )
 
     spark = get_spark(app_name="maintain_replay_bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     replay_days = [END_DATE + dt.timedelta(days=i) for i in (1, 2, 3)]
 
     for reps in scales:
@@ -166,12 +184,21 @@ def main() -> int:
                         m_ranking.add(
                             (f"I-{rep}-{di // 7}-{si}-{ri}", d, src)
                         )
-        walls = []
+        walls, jobs, tasks = [], [], []
         for day in replay_days:
             df = spark.createDataFrame(_batch_rows(day), LANDING_SCHEMA)
+            group = f"maintain_replay_r{reps}_{day.isoformat()}"
+            sc.setJobGroup(group, f"run_daily_batch {day.isoformat()}")
             t0 = time.perf_counter()
-            run_daily_batch(cat, df)
+            try:
+                run_daily_batch(cat, df)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setJobDescription(None)
             walls.append(round(time.perf_counter() - t0, 3))
+            n_jobs, n_tasks = _job_counts(sc, group)
+            jobs.append(n_jobs)
+            tasks.append(n_tasks)
             # model: insert, then T1 purge at the inserted max date
             for src in SOURCES:
                 for pos in range(RANKS):
@@ -218,6 +245,8 @@ def main() -> int:
                     "final_ranking_rows": len(got_ranking),
                     "final_song_rows": len(got_songs),
                     "per_day_wall_sec": walls,
+                    "per_day_jobs": jobs,
+                    "per_day_tasks": tasks,
                     "model_match": green,
                     "no_stale_dates": no_stale,
                 }
