@@ -79,6 +79,12 @@ def funnel_steps(
     the number of users whose earliest qualifying completion of this
     step follows their qualifying completion of the previous step.
 
+    NULL timestamps: every stage, step 0 included, excludes events whose
+    ``ts`` is NULL. Such an event completes no step and follows no
+    earlier one, so a user whose step-0 events all have a NULL ``ts`` is
+    counted at no stage; a user with another, timestamped step-0 event
+    is counted from that event on.
+
     Single-shuffle shape (round 12, guide §2.1/§2.4 — the ClickHouse
     ``windowFunnel`` plan): the previous per-stage chain of
     filter→join→min-aggregate branches re-derived stage i inside every

@@ -15,13 +15,24 @@ The FK barrier survives as operator ordering (dims before facts); the
 reference's connection-pool parallelism is subsumed by Spark scheduling
 (SURVEY.md §3.1). Under Structured Streaming the same function is the
 ``foreachBatch`` body (streaming/daily_stream.py).
+
+Once per run: ``run_daily_batch`` evaluates its input batch exactly once.
+It persists the batch on entry (unless the caller already did), so the
+upsert waves, the date collect and the mirror read the cached rows
+instead of re-running the caller's lineage (a ``createDataFrame`` batch
+is a Python RDD: every re-run is a Python-worker pass). Each dimension's
+RETURNING set is cached as well, so the maintain pins and the CSV mirror
+share one anti-join. All of these caches are released before the call
+returns; the returned deltas stay lazy over the caller's batch.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,134 +56,196 @@ class BatchDeltas:
     ranking: DataFrame
 
 
+def _utc_today() -> dt.date:
+    """The load date the reference stamps, ``now(UTC).date()``
+    (``etl_pipeline.py:843``)."""
+    return dt.datetime.now(dt.timezone.utc).date()
+
+
 def run_daily_batch(
     catalog: Catalog, daily_batch: DataFrame, csv_mirror_dir: str | None = None
 ) -> BatchDeltas:
-    """Apply one daily batch (DAILY_BATCH schema) to the star schema."""
-    artist_t = catalog.read("artist")
-    song_t = catalog.read("song")
-    map_t = catalog.read("artist_song_map")
-    ranking_t = catalog.read("ranking")
+    """Apply one daily batch (DAILY_BATCH schema) to the star schema.
 
-    # Wave 1a — artists: explode the nested struct array (P5,
-    # etl_pipeline.py:607-611), upsert on artist_id.
-    artist_batch = daily_batch.select(F.explode("artists").alias("a")).select(
-        "a.artist_id", "a.artist_name"
-    )
-    artist_res = upsert(artist_t, artist_batch, ["artist_id"])
+    The batch is evaluated once (see the module docstring). A batch the
+    caller already persisted keeps its cache after the call."""
+    owns_cache = daily_batch.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        daily_batch.persist()
+    sc = daily_batch.sparkSession.sparkContext
+    cached: list[DataFrame] = []
+    pre_pin_ids = None
+    try:
+        artist_t = catalog.read("artist")
+        song_t = catalog.read("song")
+        map_t = catalog.read("artist_song_map")
+        ranking_t = catalog.read("ranking")
 
-    # Wave 1b — songs: merge (patch apple url when newly known) + insert.
-    song_batch = daily_batch.select(
-        "isrc",
-        "song_name",
-        "song_duration_ms",
-        "is_explicit",
-        "spotify_url",
-        "apple_music_url",
-    )
-    song_res = merge_song(song_t, song_batch)
+        # Wave 1a — artists: explode the nested struct array (P5,
+        # etl_pipeline.py:607-611), upsert on artist_id.
+        artist_batch = daily_batch.select(F.explode("artists").alias("a")).select(
+            "a.artist_id", "a.artist_name"
+        )
+        artist_res = upsert(artist_t, artist_batch, ["artist_id"])
 
-    # Wave 2a — bridge rows (P5, etl_pipeline.py:781-785).
-    map_batch = daily_batch.select(
-        "isrc", F.explode("artists").alias("a")
-    ).select("a.artist_id", "isrc")
-    map_res = upsert(map_t, map_batch, ["artist_id", "isrc"])
+        # Wave 1b — songs: merge (patch apple url when newly known) + insert.
+        song_batch = daily_batch.select(
+            "isrc",
+            "song_name",
+            "song_duration_ms",
+            "is_explicit",
+            "spotify_url",
+            "apple_music_url",
+        )
+        song_res = merge_song(song_t, song_batch)
 
-    # Wave 2b — fact rows: positional rank (P6), validated (F8). The
-    # reference stamps now(UTC).date() at load time (etl_pipeline.py:843);
-    # a replayed/streamed batch may instead carry its own ``batch_date``
-    # column (backlog drains keep their original dates).
-    date_col = (
-        F.col("batch_date")
-        if "batch_date" in daily_batch.columns
-        else F.current_date()
-    )
-    ranking_batch = validate_ranking(
-        assign_positional_ranks(daily_batch).select(
+        # Wave 2a — bridge rows (P5, etl_pipeline.py:781-785).
+        map_batch = daily_batch.select(
+            "isrc", F.explode("artists").alias("a")
+        ).select("a.artist_id", "isrc")
+        map_res = upsert(map_t, map_batch, ["artist_id", "isrc"])
+
+        # Each dimension's RETURNING set is computed once: the maintain
+        # pins below build these caches as a side effect (the new table
+        # states union them in), and the CSV mirror reads them back
+        # instead of re-running the anti-join. Spark plans a cached query
+        # without AQE partition coalescing by default, which would keep
+        # each delta in spark.sql.shuffle.partitions slices and add up to
+        # that many small files to every dimension snapshot per day
+        # (tools/maintain_replay_bench.py 1, local[32] on a 4-core x86
+        # host: tasks per day grew 790/964/1004 without coalescing,
+        # 449/459/470 with it). So the cached plans are built with
+        # coalescing allowed.
+        cached = [artist_res.inserted, song_res.inserted, map_res.inserted]
+        conf = daily_batch.sparkSession.conf
+        coalesce_key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+        coalesce_was = conf.get(coalesce_key)
+        conf.set(coalesce_key, "true")
+        try:
+            for df in cached:
+                df.cache()
+        finally:
+            conf.set(coalesce_key, coalesce_was)
+
+        # Wave 2b — fact rows: positional rank (P6), validated (F8). The
+        # reference stamps now(UTC).date() once at load time
+        # (etl_pipeline.py:843); a replayed/streamed batch may instead
+        # carry its own ``batch_date`` column (backlog drains keep their
+        # original dates). The load date is a literal, not
+        # F.current_date(), which every Spark action would evaluate anew:
+        # a run crossing UTC midnight would stamp and conflict-check
+        # different days.
+        date_col = (
+            F.col("batch_date")
+            if "batch_date" in daily_batch.columns
+            else F.lit(_utc_today())
+        )
+        facts = assign_positional_ranks(daily_batch).select(
             "isrc",
             date_col.cast("date").alias("ranking_date"),
             "rank",
             F.col("source").alias("ranking_source"),
         )
-    )
-    ranking_res = upsert(ranking_t, ranking_batch, ["isrc", "ranking_date", "ranking_source"])
+        # The batch's dates, from the first action on the persisted batch
+        # (it fills the cache: no extra pass over the caller's lineage).
+        # Taken before validation, whose F8 check reads current_date and
+        # so may differ between actions; a superset of the inserted
+        # dates keeps the pruned conflict check exact either way.
+        batch_dates = sorted(
+            {r[0] for r in facts.select("ranking_date").collect()} - {None}
+        )
+        ranking_batch = validate_ranking(facts)
+        # The key contains ranking_date, so only rows on the batch's
+        # dates can conflict: the anti-join reads those partitions only.
+        # The pruned table state is never used — the fact union below is
+        # built from the full ranking_t.
+        ranking_res = upsert(
+            ranking_t.filter(F.col("ranking_date").isin(batch_dates)),
+            ranking_batch,
+            ["isrc", "ranking_date", "ranking_source"],
+        )
 
-    # Pin the batch-sized RETURNING set once: the date listing, the fact
-    # union, the mirror and the staged write all consume it, and each
-    # would otherwise re-run the anti-join against the full fact table.
-    ranking_ins = ranking_res.inserted.localCheckpoint(eager=True)
-    # One collect of the inserted dates (one value per touched day, never
-    # NULL after validate_ranking) serves both the trigger's
-    # NEW.ranking_date and the commit's touched partitions.
-    inserted_dates = [
-        r[0] for r in ranking_ins.select("ranking_date").distinct().collect()
-    ]
-    # Snapshot the persisted-RDD ids AFTER the (kept) ranking pin and
-    # BEFORE maintain()'s dimension pins: DataFrame.unpersist() is a
-    # no-op for localCheckpoint blocks (it only clears CacheManager
-    # entries — the same gap bench.py works around), so the precise way
-    # to release the dim pins after the commit is to unpersist exactly
-    # the RDD ids maintain() adds. Single-writer, like the catalog.
-    sc = daily_batch.sparkSession.sparkContext
-    pre_pin_ids = snapshot_pins(sc)
+        # Pin the batch-sized RETURNING set once: the date listing, the
+        # fact union, the mirror and the staged write all consume it, and
+        # each would otherwise re-run the anti-join against the batch's
+        # date partitions.
+        ranking_ins = ranking_res.inserted.localCheckpoint(eager=True)
+        # One collect of the inserted dates (one value per touched day,
+        # never NULL after validate_ranking), deduplicated here rather
+        # than by a distinct() job, serves both the trigger's
+        # NEW.ranking_date and the commit's touched partitions.
+        inserted_dates = sorted(
+            {r[0] for r in ranking_ins.select("ranking_date").collect()}
+        )
+        # Snapshot the persisted-RDD ids AFTER the (kept) ranking pin and
+        # BEFORE maintain()'s dimension pins: DataFrame.unpersist() is a
+        # no-op for localCheckpoint blocks (it only clears CacheManager
+        # entries — the same gap bench.py works around), so the precise
+        # way to release the dim pins after the commit is to unpersist
+        # exactly the RDD ids maintain() adds. Single-writer, like the
+        # catalog.
+        pre_pin_ids = snapshot_pins(sc)
 
-    # Trigger cascade (T1→T2→T3) relative to the batch's max date.
-    # materialize=True pins each GC'd dimension so the cascade (and the
-    # fact distinct feeding it) runs once, not once per consumer below.
-    new_max_date = max(inserted_dates, default=None)
-    tables = maintain(
-        Tables(
-            artist=artist_res.table,
-            song=song_res.table,
-            artist_song_map=map_res.table,
-            ranking=ranking_t.unionByName(ranking_ins),
-        ),
-        new_max_date,
-        materialize=True,
-    )
+        # Trigger cascade (T1→T2→T3) relative to the batch's max date.
+        # materialize=True pins each GC'd dimension so the cascade (and
+        # the fact distinct feeding it) runs once, not once per consumer
+        # below.
+        new_max_date = max(inserted_dates, default=None)
+        tables = maintain(
+            Tables(
+                artist=artist_res.table,
+                song=song_res.table,
+                artist_song_map=map_res.table,
+                ranking=ranking_t.unionByName(ranking_ins),
+            ),
+            new_max_date,
+            materialize=True,
+        )
 
-    # Persist. Deltas are materialized (cached implicitly via write) before
-    # the table swap so the mirror reflects exactly what was inserted.
-    deltas = BatchDeltas(
-        artist=artist_res.inserted,
-        song_inserted=song_res.inserted,
-        song_updated=song_res.updated,
-        artist_song_map=map_res.inserted,
-        ranking=ranking_ins,
-    )
-    if csv_mirror_dir:
-        from . import schemas
+        # Persist. The dimension deltas are cached and the fact delta
+        # pinned before the table swap, so the mirror reflects exactly
+        # what was inserted.
+        deltas = BatchDeltas(
+            artist=artist_res.inserted,
+            song_inserted=song_res.inserted,
+            song_updated=song_res.updated,
+            artist_song_map=map_res.inserted,
+            ranking=ranking_ins,
+        )
+        if csv_mirror_dir:
+            from . import schemas
 
-        for name, df in (
-            ("artist", deltas.artist),
-            ("song", deltas.song_inserted),
-            ("artist_song_map", deltas.artist_song_map),
-            ("ranking", deltas.ranking),
-        ):
-            write_csv_mirror(
-                df,
-                os.path.join(csv_mirror_dir, name),
-                columns=schemas.TABLE_SCHEMAS[name].fieldNames(),
-            )
+            for name, df in (
+                ("artist", deltas.artist),
+                ("song", deltas.song_inserted),
+                ("artist_song_map", deltas.artist_song_map),
+                ("ranking", deltas.ranking),
+            ):
+                write_csv_mirror(
+                    df,
+                    os.path.join(csv_mirror_dir, name),
+                    columns=schemas.TABLE_SCHEMAS[name].fieldNames(),
+                )
 
-    # One snapshot-consistent commit across all four tables — the Spark
-    # analog of the reference wrapping its four upsert waves in a single
-    # Postgres transaction (etl_pipeline.py:898-911). Sequential
-    # catalog.write calls left a crash window where the new song table
-    # was visible next to the old artist_song_map (round-8 verdict
-    # stretch); commit_tables publishes all four under one intent
-    # manifest with roll-forward recovery.
-    #
-    # The fact table commits PARTITION-SCOPED: a daily batch touches the
-    # batch's date partitions and the T1 purge drops a trailing date
-    # range — every other partition is byte-identical to the current
-    # snapshot and is staged as a hardlink (manifest reuse on an object
-    # store), not rewritten. At 100 TB this is the difference between a
-    # one-partition write and a full-table rewrite per day; at the 10x
-    # replay it cut the per-day wall 2.2x (BENCH_sf1.json
-    # maintain_replay_round9). Dimension tables stay full snapshot
-    # writes — they are broadcast-sized by the data model.
-    try:
+        # One snapshot-consistent commit across all four tables — the
+        # Spark analog of the reference wrapping its four upsert waves in
+        # a single Postgres transaction (etl_pipeline.py:898-911).
+        # Sequential catalog.write calls left a crash window where the
+        # new song table was visible next to the old artist_song_map;
+        # commit_tables publishes all four under one intent manifest
+        # with roll-forward recovery.
+        #
+        # The fact table commits PARTITION-SCOPED: a daily batch touches
+        # the batch's date partitions and the T1 purge drops a trailing
+        # date range — every other partition is byte-identical to the
+        # current snapshot and is staged as a hardlink (manifest reuse on
+        # an object store), not rewritten. At 100 TB this is the
+        # difference between a one-partition write and a full-table
+        # rewrite per day; at the 10x replay it cut the per-day wall 2.2x
+        # (BENCH_sf1.json maintain_replay_round9). Dimension tables stay
+        # full snapshot writes — they are broadcast-sized by the data
+        # model.
+        #
         # Hold the writer lock across the WHOLE stage+commit sequence:
         # each catalog method self-locks, but the staged fact version and
         # the manifest publication below are one logical transaction — a
@@ -186,12 +259,21 @@ def run_daily_batch(
                 catalog, tables, deltas, inserted_dates, new_max_date
             )
     finally:
-        # Release the dimension pins (their data is committed to parquet;
-        # a long-lived foreachBatch session would otherwise accumulate
-        # checkpoint blocks until GC thrash — the effect bench.py
-        # measured). ranking_ins's pin predates the snapshot and stays
-        # alive: it is returned in deltas and is batch-sized.
-        release_new_pins(sc, pre_pin_ids, "run_daily_batch")
+        # Release this run's caches: the dimension deltas first (they
+        # are built over the cached batch, and uncaching the batch first
+        # would re-plan any of them not yet filled), then the batch
+        # unless the caller owns its cache. Then the dimension pins
+        # (their data is committed to parquet; a long-lived foreachBatch
+        # session would otherwise accumulate checkpoint blocks until GC
+        # thrash — the effect bench.py measured). ranking_ins's pin
+        # predates the snapshot and stays alive: it is returned in
+        # deltas and is batch-sized.
+        for df in cached:
+            df.unpersist()
+        if owns_cache:
+            daily_batch.unpersist()
+        if pre_pin_ids is not None:
+            release_new_pins(sc, pre_pin_ids, "run_daily_batch")
 
 
 def _commit_batch(catalog, tables, deltas, inserted_dates, new_max_date):

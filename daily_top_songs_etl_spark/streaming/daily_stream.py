@@ -12,6 +12,12 @@ This is exactly the reference's operational model with the cron scheduler
 replaced by checkpointed source tracking: re-running the job never
 re-applies a consumed batch, and a backlog of N missed days drains in one
 run (the reference would need N manual runs).
+
+Each micro-batch is evaluated once per run, as the Structured Streaming
+guide advises for a ``foreachBatch`` body that feeds several sinks
+(``persist()`` … ``unpersist()``): ``run_daily_batch`` persists the batch
+on entry and releases it before returning, so its upserts, conflict
+check, CSV mirrors and commit share one evaluation of the micro-batch.
 """
 
 from __future__ import annotations
@@ -25,7 +31,7 @@ from ..catalog import Catalog
 from ..pipeline import run_daily_batch
 
 # Landed batches carry their own date (a drained backlog keeps history);
-# the pipeline falls back to current_date when the column is absent.
+# without the column, the pipeline stamps one UTC load date per batch.
 LANDING_SCHEMA = T.StructType(
     list(schemas.DAILY_BATCH.fields)
     + [T.StructField("batch_date", T.DateType(), nullable=True)]

@@ -2770,6 +2770,29 @@ def test_interval_coverage_island_merge(spark):
     assert got[2].covered_us == 300 * 1_000_000
 
 
+def test_funnel_steps_excludes_null_timestamp_events(spark):
+    """A user whose step-0 events all have a NULL ts is counted at no
+    stage; a NULL-ts event next to a timestamped one is skipped."""
+    from daily_top_songs_etl_spark.extensions.events import funnel_steps
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def ts(sec):
+        return t0 + dt.timedelta(seconds=sec)
+
+    rows = [
+        (1, ts(0), "view"), (1, ts(10), "cart"),  # converts
+        (2, None, "view"), (2, None, "view"), (2, ts(20), "cart"),  # never enters
+        (3, None, "view"), (3, ts(5), "view"), (3, ts(30), "cart"),  # converts
+        (4, ts(0), "view"), (4, None, "cart"),  # step 0 only
+    ]
+    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
+    got = [(r.step_index, r.step, r.users)
+           for r in funnel_steps(ev, ["view", "cart"]).orderBy("step_index").collect()]
+    assert got == [(0, "view", 3), (1, "cart", 2)]
+
+
 def test_vocab_overlap_and_correlation_sanity(spark, documents):
     from daily_top_songs_etl_spark.extensions.text import (
         length_correlation,

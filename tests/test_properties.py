@@ -382,6 +382,124 @@ def test_leap_day_purge_matches_spark_probe(spark, tmp_path):
     }
 
 
+def _ranking_keys(cat: Catalog) -> list[tuple[str, dt.date]]:
+    return sorted((r.isrc, r.ranking_date) for r in cat.read("ranking").collect())
+
+
+def test_daily_batch_evaluated_once_with_date_pruned_conflict_check(
+    spark, tmp_path, monkeypatch
+):
+    """One run evaluates each batch row exactly once (a Python ``map``
+    bumps an accumulator per row), and a batch spanning two dates with
+    one conflicting row per date inserts exactly the new keys, checked
+    against a fact scan pruned to those two date partitions."""
+    import os
+    import re
+
+    from daily_top_songs_etl_spark import pipeline
+
+    d1, d2 = dt.date(2025, 3, 2), dt.date(2025, 3, 3)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    seed = [_chart_row(d1, 0), _chart_row(d2, 1)]
+    run_daily_batch(cat, spark.createDataFrame(seed, LANDING_SCHEMA))
+
+    scans, real_upsert = [], pipeline.upsert
+
+    def spy(existing, batch, key, priority=None):
+        if "ranking_date" in key:
+            scans.append(existing._jdf.queryExecution().executedPlan().toString())
+        return real_upsert(existing, batch, key, priority)
+
+    monkeypatch.setattr(pipeline, "upsert", spy)
+
+    sc = spark.sparkContext
+    evaluated = sc.accumulator(0)
+
+    def bump(row):
+        evaluated.add(1)
+        return row
+
+    def artist_files():
+        return sum(f.endswith(".parquet") for f in os.listdir(cat.path("artist")))
+
+    seed_files = artist_files()
+    days = {n: d1 if n % 2 == 0 else d2 for n in range(8)}
+    rows = [_chart_row(day, n) for n, day in days.items()]  # 0 and 1 conflict
+    batch = spark.createDataFrame(sc.parallelize(rows, 2).map(bump), LANDING_SCHEMA)
+    deltas = run_daily_batch(cat, batch, str(tmp_path / "mirror"))
+    assert evaluated.value == len(rows)
+    # the cached six-artist delta is coalesced: it adds one file, not
+    # one per shuffle partition it hashes into
+    assert artist_files() <= seed_files + 1
+
+    new = [(f"ZZLEAP{n:06d}", day) for n, day in days.items() if n >= 2]
+    assert sorted((r.isrc, r.ranking_date) for r in deltas.ranking.collect()) == new
+    assert _ranking_keys(cat) == sorted((f"ZZLEAP{n:06d}", day) for n, day in days.items())
+    [plan] = scans
+    m = re.search(r"PartitionFilters: \[ranking_date#\d+ IN \(([^)]*)\)\]", plan)
+    assert m and sorted(m.group(1).split(",")) == [d1.isoformat(), d2.isoformat()]
+
+
+def test_daily_batch_releases_its_caches(spark, tmp_path):
+    """After a run, a caller's own persist() survives, and the only new
+    persisted RDD is the kept ``ranking_ins`` pin: the run's batch and
+    dimension-delta caches are gone, whoever persisted the batch."""
+    from pyspark import StorageLevel
+
+    from daily_top_songs_etl_spark.pins import snapshot_pins
+
+    sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    days = [dt.date(2025, 5, 1), dt.date(2025, 5, 2)]
+    for n, day in enumerate(days):
+        batch = spark.createDataFrame([_chart_row(day, n)], LANDING_SCHEMA)
+        caller_owned = n == 0
+        if caller_owned:
+            batch.persist()
+            batch.count()
+        before = snapshot_pins(sc)
+        deltas = run_daily_batch(cat, batch, str(tmp_path / "mirror"))
+        # only new ids count: Spark's context cleaner may unpersist an
+        # earlier test's garbage-collected pins meanwhile
+        assert len(snapshot_pins(sc) - before) == 1
+        for df in (deltas.artist, deltas.song_inserted, deltas.artist_song_map):
+            assert df.storageLevel == StorageLevel.NONE
+        if caller_owned:
+            assert batch.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+            batch.unpersist()
+        assert cache_manager.isEmpty()
+    assert _ranking_keys(cat) == [("ZZLEAP000000", days[0]), ("ZZLEAP000001", days[1])]
+
+
+def test_load_date_is_stamped_once_per_batch(spark, tmp_path, monkeypatch):
+    """A batch without ``batch_date`` takes one UTC load date: with a
+    clock that moves a day on every read, every inserted row carries the
+    first date, and the conflict check looks at that date's partition."""
+    from daily_top_songs_etl_spark import pipeline
+    from daily_top_songs_etl_spark.schemas import DAILY_BATCH
+
+    first = dt.date(2025, 6, 10)
+    reads = []
+
+    def clock():
+        reads.append(first + dt.timedelta(days=len(reads)))
+        return reads[-1]
+
+    monkeypatch.setattr(pipeline, "_utc_today", clock)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    seed = spark.createDataFrame([_chart_row(first, 0)], LANDING_SCHEMA)
+    run_daily_batch(cat, seed)
+    rows = [_chart_row(first, n)[:-1] for n in (0, 1)]
+    deltas = run_daily_batch(cat, spark.createDataFrame(rows, DAILY_BATCH))
+    assert reads
+    assert [(r.isrc, r.ranking_date) for r in deltas.ranking.collect()] == [
+        ("ZZLEAP000001", first)
+    ]
+    assert _ranking_keys(cat) == [("ZZLEAP000000", first), ("ZZLEAP000001", first)]
+
+
 @settings(
     max_examples=5,
     deadline=None,
