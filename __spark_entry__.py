@@ -3958,8 +3958,9 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3 Lloyd iterations, k=4, deterministic lowest-id init. The
     iterative fixpoint is hash-verified by UNROLLING: the known iteration
     count becomes 3 chained (assign → update) CTE rounds in one DuckDB
-    statement (`_oracle_kmeans_unrolled`) — the driver-sequenced loop and
-    the SQL unroll must produce bit-identical centroids and sizes.
+    statement (`_oracle_kmeans_unrolled`) — the lazy Lloyd loop
+    (`similarity._lloyd`) and the SQL unroll must produce bit-identical
+    centroids and sizes.
     Spark's HALF_UP centroid rounding is mirrored with an away-from-zero
     closed form (floor(|x| + 0.5) with the sign reapplied)."""
     from daily_top_songs_etl_spark.extensions.similarity import kmeans_fit

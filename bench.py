@@ -28,6 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from daily_top_songs_etl_spark.pins import release_new_pins
 from daily_top_songs_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,6 +44,50 @@ HEADLINE = [
     "left_join",
     "window_gap",
 ]
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM/session so the first timed query isn't charged startup:
+    codegen + noop sink via the range query, then the parquet scan path
+    (Hadoop FS init, footer reads, vectorized-reader codegen) via a
+    trivial count over each input table."""
+    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
+        "noop"
+    ).save()
+    # Warm the Arrow Python-runner path (worker pool spawn + pandas/pyarrow
+    # import + Arrow codec init costs seconds ONCE per session; without
+    # this the first mapInPandas query is charged session setup, not its
+    # own work).
+    def _identity(batches):
+        yield from batches
+
+    spark.range(1024).repartition(
+        spark.sparkContext.defaultParallelism
+    ).mapInPandas(_identity, "id long").write.mode("overwrite").format(
+        "noop"
+    ).save()
+    # Warm through entrymod._t — the same loader the queries use — so the
+    # one-time multi-file layout materialization (and its first read)
+    # happens here, not inside the first timed query to touch each table.
+    for tbl in (
+        "region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings",
+    ):
+        try:
+            entrymod._t(spark, sf_dir, tbl).selectExpr(
+                "count(*)"
+            ).write.mode("overwrite").format("noop").save()
+        except Exception:
+            pass
+
+
+def reset_between_queries(spark, what: str) -> None:
+    """Drop persisted storage between queries. clearCache() misses
+    localCheckpoint RDD blocks (the LSH family checkpoints its signature
+    tables); release them too or consecutive dedup queries inflate 2-3x
+    on accumulated blocks."""
+    spark.catalog.clearCache()
+    release_new_pins(spark.sparkContext, set(), what)
 
 
 def main() -> None:
@@ -81,38 +126,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1)) if m else None
 
-    # Warm the JVM/session so the first timed query isn't charged startup:
-    # codegen + noop sink via the range query, then the parquet scan path
-    # (Hadoop FS init, footer reads, vectorized-reader codegen) via a
-    # trivial count over each input table.
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # Warm the Arrow Python-runner path (worker pool spawn + pandas/pyarrow
-    # import + Arrow codec init costs seconds ONCE per session; without
-    # this the first mapInPandas query is charged session setup, not its
-    # own work).
-    def _identity(batches):
-        yield from batches
-
-    spark.range(1024).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_identity, "id long").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # Warm through entrymod._t — the same loader the queries use — so the
-    # one-time multi-file layout materialization (and its first read)
-    # happens here, not inside the first timed query to touch each table.
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        try:
-            entrymod._t(spark, SF_DIR, tbl).selectExpr(
-                "count(*)"
-            ).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+    warm_session(spark, SF_DIR)
 
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
@@ -135,15 +149,7 @@ def main() -> None:
         # sweep those otherwise accumulate until late queries run inside
         # GC thrash (observed: the same query 1.3 s fresh vs 60 s at
         # position ~115).
-        spark.catalog.clearCache()
-        # clearCache() misses localCheckpoint RDD blocks (the LSH family
-        # checkpoints its signature tables); unpersist them explicitly or
-        # consecutive dedup queries inflate 2-3x on accumulated blocks.
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        reset_between_queries(spark, "bench")
         if (i + 1) % 5 == 0:
             spark.sparkContext._jvm.System.gc()
 

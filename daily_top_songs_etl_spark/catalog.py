@@ -689,7 +689,18 @@ class Catalog:
         backend is explicitly single-node POSIX (see ``_reuse_file``);
         construct the catalog with ``lease_ttl=...`` to select the
         multi-host TTL-lease lock with fencing tokens instead
-        (:class:`_LeaseLock`)."""
+        (:class:`_LeaseLock`).
+
+        The lock is catalog-global, not per table, and some holders keep
+        it for a corpus-scale read-modify-write: the text index append
+        and merge (``append_to_text_index``, ``merge_text_index``) and
+        the ANN index append, merge and delete (``append_to_ann_index``,
+        ``merge_ann_index``, ``delete_from_ann_index``) hold it from
+        their ledger/stats read through tokenizing or assigning the
+        batch, writing it and committing. For that whole time any other
+        writer on the same catalog — the daily batch, a matview
+        refresh, another index — gets :class:`ConcurrentWriterError`;
+        there is no wait or retry."""
         if self.lease_ttl is not None:
             return _LeaseLock(self, self.lease_ttl)
         return _WriterLock(self)

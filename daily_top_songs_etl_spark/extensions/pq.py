@@ -2,17 +2,17 @@
 
 The classic ANN storage trick (Jégou et al. 2011, public method): split
 each D-dim vector into ``m`` subvectors, k-means each subspace
-independently (the same broadcast-centroid Lloyd math as
-:func:`similarity.kmeans_fit`), and store each vector as ``m`` small
-integer codes. With m=4, k=16 a 64-dim float vector compresses
-256 bytes → 4 half-byte codes (PQ16x4 shape).
+independently, and store each vector as ``m`` small integer codes. With
+m=4, k=16 a 64-dim float vector compresses 256 bytes → 4 half-byte
+codes (PQ16x4 shape).
 
 Scale shape:
-- **train**: ONE fused Lloyd loop over the exploded (vec, subspace)
-  relation — per iteration the m·k codeword table broadcasts and the
-  assignment + per-(subspace, cluster, dim) centroid update are a
-  single shuffle, i.e. one corpus pass per iteration rather than m
-  per-subspace jobs.
+- **train**: the m k-means fits are ONE run of
+  :func:`similarity._lloyd` — the loop behind
+  :func:`similarity.kmeans_fit` — over the exploded (vec, subspace)
+  relation, keyed on ``subspace``: per iteration the m·k codeword table
+  broadcasts once and the centroid update is a single shuffle, i.e. one
+  corpus pass per iteration rather than m per-subspace jobs.
 - **encode**: the full m-subspace codebook is m×k rows — broadcast onto
   the corpus; the argmin per (vector, subspace) folds into ONE hash
   aggregate on vec_id (min-of-struct per subspace via conditional
@@ -30,7 +30,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import QUANT_SCALE
+from .similarity import QUANT_SCALE, _lloyd
 
 
 def _dim(embeddings: DataFrame, col: str) -> int:
@@ -48,38 +48,25 @@ def pq_train(
     id_col: str = "vec_id",
     col: str = "embedding",
     d: int | None = None,
-    centroid_state: str = "recompute",
 ) -> DataFrame:
-    """Train all ``m`` subspace codebooks in ONE fused Lloyd loop.
+    """Train all ``m`` subspace codebooks in ONE Lloyd loop.
 
-    Semantically this is m independent k-means fits (one per subspace),
-    and the math is bit-identical to running :func:`similarity.kmeans_fit`
-    per sliced subvector (same quantization, same lowest-id init per
-    subspace, same exact-BIGINT distances, same struct-ordered
-    tie-breaks, same centroid rounding) — the per-subspace DuckDB unroll
-    oracle keeps hash-matching. Physically it is a single loop over an
-    exploded (vec, subspace, qsvec) relation: per iteration the m·k
-    codeword table broadcasts once and the assignment + centroid update
-    are ONE shuffle keyed on (subspace, cluster, dim) instead of m
-    separate per-subspace jobs — at 100 TB that is one corpus pass per
-    iteration rather than m, and locally it collapses ~4× the stage
-    count the sequential unionByName plan paid.
+    Semantically this is m independent k-means fits, one per subspace,
+    and it is literally :func:`similarity.kmeans_fit`'s loop
+    (:func:`similarity._lloyd`) keyed on ``subspace``: same quantization,
+    same lowest-id init per subspace, same exact-BIGINT distances, same
+    struct-ordered tie-breaks, same centroid rounding. With ``m=1`` it
+    equals ``kmeans_fit`` row for row (unit-tested), and the
+    per-subspace DuckDB unroll oracle keeps hash-matching. Physically
+    the loop runs over an exploded (vec, subspace, qvec) relation: per
+    iteration the m·k codeword table broadcasts once and the centroid
+    update is ONE shuffle keyed on (subspace, cluster, dim) instead of
+    m separate per-subspace jobs.
 
     Returns (subspace, code, centroid array<double>, n_vectors).
 
     ``d`` — the (constant) embedding dimension; pass it when the caller
-    already knows it to skip the one-row probe job ``_dim`` costs.
-
-    ``centroid_state`` — the same measured materialization knob as
-    :func:`similarity.kmeans_fit` (both paths bit-identical):
-    ``"recompute"`` keeps the codewords a lazily chained relation
-    (round i re-executes rounds 1..i-1 from the cached melted corpus —
-    measured faster at local scale); ``"driver"`` collects the m·k
-    BIGINT codewords each round and inlines them as literals —
-    O(iters) corpus scans instead of O(iters²), the cluster-scale
-    path, and ~3× fewer driver-sequenced jobs."""
-    if centroid_state not in ("recompute", "driver"):
-        raise ValueError(f"unknown centroid_state {centroid_state!r}")
+    already knows it to skip the one-row probe job ``_dim`` costs."""
     if d is None:
         d = _dim(embeddings, col)
     if d % m != 0:
@@ -114,145 +101,8 @@ def pq_train(
             F.col("qvec").alias("cvec"),
         )
     )
-    # Per-iteration assignment is a PURE PROJECTION: the m·k codewords
-    # collapse to one broadcast row holding an array of (subspace,
-    # cluster, cvec) structs; each melted (vec, subspace) row filters its
-    # subspace's codewords and takes array_min(struct(d, cluster)) —
-    # identical exact-BIGINT distances and struct-ordered tie-break to
-    # the previous broadcast-join + groupBy(id, subspace) shape, WITHOUT
-    # that shape's per-iteration corpus-wide shuffle. The only exchange
-    # left per iteration is the (subspace, cluster, dim) partial-sum
-    # centroid update.
-    def _cb_arr(cent: DataFrame) -> DataFrame:
-        return cent.agg(
-            F.array_sort(
-                F.collect_list(F.struct("subspace", "cluster", "cvec"))
-            ).alias("__cb")
-        )
-
-    def _best_cluster(cb_col: Column) -> Column:
-        return F.array_min(
-            F.transform(
-                F.filter(
-                    cb_col,
-                    lambda c: c["subspace"] == F.col("subspace"),
-                ),
-                lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("qvec"),
-                            c["cvec"],
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("bigint"),
-                        lambda a, x: a + x,
-                    ).alias("d"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )["cluster"]
-
-    def _per_dim_update(assigned: DataFrame) -> DataFrame:
-        per_dim = (
-            assigned.select(
-                "subspace", "cluster", F.posexplode("qvec").alias("pos", "v")
-            )
-            .groupBy("subspace", "cluster", "pos")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        )
-        return per_dim.groupBy("subspace", "cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "s", "c"))),
-                lambda x: F.round(
-                    x["s"].cast("double") / x["c"].cast("double"), 0
-                ).cast("bigint"),
-            ).alias("cvec")
-        )
-
-    def _finish(centroids: DataFrame, sizes: DataFrame) -> DataFrame:
-        return (
-            centroids.join(sizes, ["subspace", "cluster"], "left")
-            .select(
-                "subspace",
-                F.col("cluster").alias("code"),
-                F.transform(
-                    "cvec", lambda x: x.cast("double") / QUANT_SCALE
-                ).alias("centroid"),
-                F.coalesce("n_vectors", F.lit(0)).alias("n_vectors"),
-            )
-        )
-
-    if centroid_state == "driver":
-        spark = embeddings.sparkSession
-
-        def _cb_df(rows) -> DataFrame:
-            return spark.createDataFrame(
-                [(s, c, cv) for s, c, cv in rows],
-                "subspace int, cluster int, cvec array<bigint>",
-            )
-
-        def _assign(rows) -> DataFrame:
-            # driver-held codewords re-enter as a LITERAL one-row
-            # broadcast relation (not inline literal expressions — a
-            # constant array this size embedded in the plan defeats
-            # whole-stage codegen and ran 2-5x slower when measured):
-            # same broadcast + array_min projection as the recompute
-            # path, but the subtree under the broadcast is a local
-            # literal relation instead of the prior iterations' nested
-            # aggregation lineage.
-            if not rows:  # empty corpus: no codewords, empty assignment
-                return subs.select(
-                    id_col,
-                    "subspace",
-                    "qvec",
-                    F.lit(None).cast("int").alias("cluster"),
-                ).filter(F.lit(False))
-            return subs.crossJoin(
-                F.broadcast(_cb_arr(_cb_df(rows)))
-            ).select(
-                id_col,
-                "subspace",
-                "qvec",
-                _best_cluster(F.col("__cb")).alias("cluster"),
-            )
-
-        cb_rows = sorted(
-            (int(r["subspace"]), int(r["cluster"]), [int(x) for x in r["cvec"]])
-            for r in centroids.collect()
-        )
-        for _ in range(iters):
-            cb_rows = sorted(
-                (int(r["subspace"]), int(r["cluster"]), [int(x) for x in r["cvec"]])
-                for r in _per_dim_update(_assign(cb_rows)).collect()
-            )
-        sizes = (
-            _assign(cb_rows)
-            .groupBy("subspace", "cluster")
-            .agg(F.count(F.lit(1)).alias("n_vectors"))
-        )
-        return _finish(_cb_df(cb_rows), sizes)
-
-    for _ in range(iters):
-        assigned = subs.crossJoin(F.broadcast(_cb_arr(centroids))).select(
-            id_col,
-            "subspace",
-            "qvec",
-            _best_cluster(F.col("__cb")).alias("cluster"),
-        )
-        centroids = _per_dim_update(assigned)
-    # The FINAL codeword relation (m·k tiny rows) is referenced twice —
-    # the occupancy pass's broadcast and the returned join's left side —
-    # and each reference re-derives the whole nested iteration tree over
-    # the cached melted corpus. Pin it so the train lineage executes
-    # once (the kmeans_fit shape).
-    centroids = centroids.localCheckpoint(eager=True)
-    sizes = (
-        subs.crossJoin(F.broadcast(_cb_arr(centroids)))
-        .select("subspace", _best_cluster(F.col("__cb")).alias("cluster"))
-        .groupBy("subspace", "cluster")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-    return _finish(centroids, sizes)
+    trained = _lloyd(subs, centroids, iters, keys=("subspace",))
+    return trained.withColumnRenamed("cluster", "code")
 
 
 def pq_encode(

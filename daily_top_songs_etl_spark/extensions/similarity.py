@@ -23,6 +23,8 @@ Scale design:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -426,37 +428,116 @@ def normalize_embeddings(embeddings: DataFrame, id_col: str = "vec_id") -> DataF
     )
 
 
+def _lloyd(
+    points: DataFrame,
+    centroids: DataFrame,
+    iters: int,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Lloyd's iterations — the one loop behind :func:`kmeans_fit` and
+    :func:`pq.pq_train`.
+
+    ``points`` carries ``(*keys, qvec)`` (other columns are ignored) and
+    ``centroids`` the initial ``(*keys, cluster, cvec)``, both quantized
+    BIGINT arrays. Each ``keys`` value is an independent k-means: a
+    point is only assigned to the centroids of its own keys. Returns
+    ``(*keys, cluster, centroid array<double>, n_vectors)``.
+
+    Scale shape per iteration: the centroids collapse to ONE broadcast
+    row holding an array of ``(*keys, cluster, cvec)`` structs, and the
+    assignment is a pure projection — ``array_min(struct(d, cluster))``
+    over exact-BIGINT squared distances, ties broken on cluster id by
+    the struct ordering. The only exchange per iteration is the
+    ``(*keys, cluster, pos)`` partial-sum update (|centroids| × D rows,
+    corpus-size-independent). The round chain stays lazy: nothing runs
+    until the final pin, so the whole train executes as one query with
+    one corpus pass per round. Callers cache ``points``.
+    """
+
+    def _cent_arr(cent: DataFrame) -> DataFrame:
+        return cent.agg(
+            F.array_sort(
+                F.collect_list(F.struct(*keys, "cluster", "cvec"))
+            ).alias("__cents")
+        )
+
+    def _best_cluster(carr: Column) -> Column:
+        if keys:
+            carr = F.filter(
+                carr,
+                lambda c: reduce(
+                    lambda a, b: a & b, [c[k] == F.col(k) for k in keys]
+                ),
+            )
+        return F.array_min(
+            F.transform(
+                carr,
+                lambda c: F.struct(
+                    F.aggregate(
+                        F.zip_with(
+                            F.col("qvec"),
+                            c["cvec"],
+                            lambda x, y: (x - y) * (x - y),
+                        ),
+                        F.lit(0).cast("bigint"),
+                        lambda a, x: a + x,
+                    ).alias("d"),
+                    c["cluster"].alias("cluster"),
+                ),
+            )
+        )["cluster"]
+
+    def _assign(cent: DataFrame) -> DataFrame:
+        return points.crossJoin(F.broadcast(_cent_arr(cent))).select(
+            *keys, "qvec", _best_cluster(F.col("__cents")).alias("cluster")
+        )
+
+    for _ in range(iters):
+        per_dim = (
+            _assign(centroids)
+            .select(*keys, "cluster", F.posexplode("qvec").alias("pos", "v"))
+            .groupBy(*keys, "cluster", "pos")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+        )
+        centroids = per_dim.groupBy(*keys, "cluster").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "s", "c"))),
+                lambda x: F.round(
+                    x["s"].cast("double") / x["c"].cast("double"), 0
+                ).cast("bigint"),
+            ).alias("cvec")
+        )
+    # The FINAL centroid relation (tiny) is referenced twice — the
+    # occupancy pass's broadcast and the returned join's left side — and
+    # each reference re-derives the whole nested iteration tree over the
+    # cached points. Pin it so the train lineage executes once.
+    centroids = centroids.localCheckpoint(eager=True)
+    sizes = (
+        _assign(centroids)
+        .groupBy(*keys, "cluster")
+        .agg(F.count(F.lit(1)).alias("n_vectors"))
+    )
+    return centroids.join(sizes, [*keys, "cluster"], "left").select(
+        *keys,
+        "cluster",
+        F.transform("cvec", lambda x: x.cast("double") / QUANT_SCALE).alias(
+            "centroid"
+        ),
+        F.coalesce("n_vectors", F.lit(0)).alias("n_vectors"),
+    )
+
+
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = 4,
     iters: int = 3,
     id_col: str = "vec_id",
-    centroid_state: str = "recompute",
     init_centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over an embedding column — the iterative class the
     DuckDB oracle can't express (driver records the rows-only check; the
-    unit test plants separable clusters and asserts recovery).
-
-    Scale shape per iteration: the k×D centroid table BROADCASTS onto the
-    corpus (k rows — never a shuffle); assignment is an exact-integer
-    argmin via min(struct(dist, cluster)) — a plain aggregate-free
-    projection after the broadcast join; the update step is the same
-    two-phase (cluster, dim) aggregation as `embedding_centroids`, so the
-    only real shuffle per iteration is |k| × D partial sums.
-
-    ``centroid_state`` is the pagerank-style measured materialization
-    knob (both paths are bit-identical — unit-tested):
-
-    - ``"recompute"`` (default): centroids stay a lazily chained
-      relation; round i's plan re-executes rounds 1..i-1 from the cached
-      corpus. MEASURED faster at local scale (kmeans sf0.1 warm: 3.1s vs
-      4.2s) because tiny-relation recomputation is cheaper than
-      per-round driver roundtrips.
-    - ``"driver"``: each round collects the k×D BIGINT centroids
-      (bounded driver state, not data rows) and re-broadcasts them as a
-      literal table — O(iters) corpus scans total instead of O(iters²).
-      The cluster-scale path once corpus scans dominate roundtrips.
+    unit test plants separable clusters and asserts recovery). The
+    iterations are :func:`_lloyd` over the cached quantized corpus.
 
     Determinism: init = the k lowest ids' vectors; distances are exact
     BIGINT sums of squares on quantized components; centroid updates
@@ -469,113 +550,7 @@ def kmeans_fit(
     one or two rounds re-center an existing quantizer on the current
     corpus without the full rebuild. ``k`` is ignored when given.
     """
-    if centroid_state not in ("recompute", "driver"):
-        raise ValueError(f"unknown centroid_state {centroid_state!r}")
-    spark = embeddings.sparkSession
     q = quantize_embeddings(embeddings).select(id_col, "qvec").cache()
-    if centroid_state == "driver":
-        if init_centroids is not None:
-            # warm start: collect the (tiny) stored centroids,
-            # re-quantized exactly as _centroid_rel does — bit-identical
-            # to the recompute path's warm-start relation
-            cent_rows = sorted(
-                (int(r["cluster"]), [int(x) for x in r["cvec"]])
-                for r in init_centroids.select(
-                    F.col("cluster").cast("int").alias("cluster"),
-                    F.transform(
-                        "centroid",
-                        lambda x: F.round(x * QUANT_SCALE, 0).cast(
-                            "bigint"
-                        ),
-                    ).alias("cvec"),
-                ).collect()
-            )
-        else:
-            init = sorted(
-                (r[0], list(r[1]))
-                for r in q.orderBy(id_col).limit(k).collect()
-            )
-            cent_rows = [(i, cv) for i, (_, cv) in enumerate(init)]
-
-        def _cent_df(rows):
-            return spark.createDataFrame(
-                rows, "cluster int, cvec array<bigint>"
-            )
-
-        def _assign(rows):
-            # driver-held centroids re-enter as a LITERAL one-row
-            # broadcast relation (not inline literal expressions — a
-            # constant array this size embedded in the plan defeats
-            # whole-stage codegen and measured 2-5x slower): the same
-            # broadcast + array_min projection as the recompute path —
-            # identical exact-BIGINT distances and min(struct(d,
-            # cluster)) tie-break — but the subtree under the broadcast
-            # is a local literal relation instead of the prior
-            # iterations' nested aggregation lineage.
-            if not rows:  # empty corpus: no clusters, empty assignment
-                return q.select(
-                    id_col, "qvec", F.lit(None).cast("int").alias("cluster")
-                ).filter(F.lit(False))
-            cents = _cent_df(rows).agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cluster", "cvec"))
-                ).alias("__cents")
-            )
-            best = F.array_min(
-                F.transform(
-                    F.col("__cents"),
-                    lambda c: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("qvec"),
-                                c["cvec"],
-                                lambda x, y: (x - y) * (x - y),
-                            ),
-                            F.lit(0).cast("bigint"),
-                            lambda a, x: a + x,
-                        ).alias("d"),
-                        c["cluster"].alias("cluster"),
-                    ),
-                )
-            )
-            return q.crossJoin(F.broadcast(cents)).select(
-                id_col, "qvec", best["cluster"].alias("cluster")
-            )
-
-        for _ in range(iters):
-            per_dim = (
-                _assign(cent_rows)
-                .select("cluster", F.posexplode("qvec").alias("pos", "v"))
-                .groupBy("cluster", "pos")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-            )
-            updated = per_dim.groupBy("cluster").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s", "c"))),
-                    lambda x: F.round(
-                        x["s"].cast("double") / x["c"].cast("double"), 0
-                    ).cast("bigint"),
-                ).alias("cvec")
-            )
-            cent_rows = sorted(
-                (r["cluster"], list(r["cvec"])) for r in updated.collect()
-            )
-        sizes = (
-            _assign(cent_rows)
-            .groupBy(F.col("cluster"))
-            .agg(F.count(F.lit(1)).alias("n_vectors"))
-        )
-        return (
-            _cent_df(cent_rows)
-            .join(sizes, "cluster", "left")
-            .select(
-                "cluster",
-                F.transform(
-                    "cvec", lambda x: x.cast("double") / QUANT_SCALE
-                ).alias("centroid"),
-                F.coalesce("n_vectors", F.lit(0)).alias("n_vectors"),
-            )
-        )
     if init_centroids is not None:
         # Re-quantize stored float centroids exactly as _centroid_rel
         # does — bit-identical to the quantized components they were
@@ -598,82 +573,7 @@ def kmeans_fit(
                 F.col("qvec").alias("cvec"),
             )
         )
-    # Assignment is a PURE PROJECTION: the k centroids collapse to one
-    # broadcast row holding an array of (cluster, cvec) structs and the
-    # argmin is array_min(struct(d, cluster)) — identical exact-BIGINT
-    # distances and identical struct-ordered tie-break to the previous
-    # groupBy(id).agg(min(struct)) shape, WITHOUT the per-iteration
-    # corpus-wide shuffle that shape paid. Per iteration the only
-    # remaining exchange is the (cluster, dim) partial-sum update.
-    def _best_cluster(carr: Column) -> Column:
-        return F.array_min(
-            F.transform(
-                carr,
-                lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("qvec"),
-                            c["cvec"],
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("bigint"),
-                        lambda a, x: a + x,
-                    ).alias("d"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )["cluster"]
-
-    def _cent_arr(cent: DataFrame) -> DataFrame:
-        return cent.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "cvec"))
-            ).alias("__cents")
-        )
-
-    for _ in range(iters):
-        assigned = (
-            q.crossJoin(F.broadcast(_cent_arr(centroids)))
-            .select(
-                id_col,
-                "qvec",
-                _best_cluster(F.col("__cents")).alias("cluster"),
-            )
-        )
-        per_dim = (
-            assigned.select("cluster", F.posexplode("qvec").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        )
-        centroids = per_dim.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "s", "c"))),
-                lambda x: F.round(
-                    x["s"].cast("double") / x["c"].cast("double"), 0
-                ).cast("bigint"),
-            ).alias("cvec")
-        )
-    # The FINAL centroid relation (k tiny rows) is referenced twice —
-    # the occupancy pass's broadcast and the returned join's left side —
-    # and each reference re-derives the whole nested iteration tree over
-    # the cached corpus. Pin it so the train lineage executes once.
-    centroids = centroids.localCheckpoint(eager=True)
-    sizes = (
-        q.crossJoin(F.broadcast(_cent_arr(centroids)))
-        .select(_best_cluster(F.col("__cents")).alias("cluster"))
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-    return (
-        centroids.join(sizes, "cluster", "left")
-        .select(
-            "cluster",
-            F.transform("cvec", lambda x: x.cast("double") / QUANT_SCALE).alias(
-                "centroid"
-            ),
-            F.coalesce("n_vectors", F.lit(0)).alias("n_vectors"),
-        )
-    )
+    return _lloyd(q, centroids, iters)
 
 
 def quantize_int8(

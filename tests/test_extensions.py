@@ -2119,26 +2119,60 @@ def test_dedup_apply_priority_picks_best(spark):
     assert {r.doc_id for r in base.collect()} == {1, 7, 9}  # min-id rep
 
 
-def test_kmeans_centroid_state_paths_identical(spark):
-    """The pagerank-style materialization knob: the lazily chained
-    default and the driver-state loop produce bit-identical centroids
-    and sizes (the knob trades corpus scans for driver roundtrips, never
-    results)."""
+def test_lloyd_one_loop_shared_by_kmeans_and_pq(spark):
+    """kmeans_fit and pq_train run one shared Lloyd loop
+    (similarity._lloyd): pq_train with m=1 IS kmeans_fit row for row, an
+    empty corpus trains to zero rows of the right schema with no special
+    case, and the lazy round chain stays within the job budget it has
+    always had — a per-round driver collect would add jobs."""
+    import os
+
+    from daily_top_songs_etl_spark.extensions.pq import pq_train
     from daily_top_songs_etl_spark.extensions.similarity import kmeans_fit
 
-    emb = spark.read.parquet(SF_DIR + "/embeddings.parquet").filter(
-        F.col("vec_id") < 300
+    sf001 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    emb = spark.read.parquet(sf001 + "/embeddings.parquet")
+    sc = spark.sparkContext
+
+    def run(group, build):
+        # the train runs while the DataFrame is BUILT (the final pin is
+        # eager), so construction happens inside the job group
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(map(tuple, build().collect()))
+        finally:
+            sc.setJobGroup(None, None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    km, km_jobs = run("lloyd-kmeans", lambda: kmeans_fit(emb, k=4, iters=3))
+    pq, pq_jobs = run(
+        "lloyd-pq",
+        lambda: pq_train(emb, m=1, k=4, iters=3)
+        .drop("subspace")
+        .withColumnRenamed("code", "cluster"),
     )
-    a = sorted(map(tuple, kmeans_fit(emb, k=4, iters=3).collect()))
-    b = sorted(
-        map(
-            tuple,
-            kmeans_fit(emb, k=4, iters=3, centroid_state="driver").collect(),
-        )
-    )
-    assert a == b
-    with pytest.raises(ValueError, match="centroid_state"):
-        kmeans_fit(emb, centroid_state="bogus")
+    assert len(km) == 4
+    assert pq == km
+    # the job counts these two calls have always had at sf0.01; a
+    # per-round driver collect would exceed them
+    assert km_jobs <= 21 and pq_jobs <= 24, (km_jobs, pq_jobs)
+
+    empty = emb.filter(F.lit(False))
+    km0 = kmeans_fit(empty, k=4, iters=3)
+    pq0 = pq_train(empty, m=4, k=8, iters=2, d=64)
+    assert km0.collect() == [] and pq0.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in km0.schema] == [
+        ("cluster", "int"),
+        ("centroid", "array<double>"),
+        ("n_vectors", "bigint"),
+    ]
+    assert [(f.name, f.dataType.simpleString()) for f in pq0.schema] == [
+        ("subspace", "int"),
+        ("code", "int"),
+        ("centroid", "array<double>"),
+        ("n_vectors", "bigint"),
+    ]
 
 
 def test_vocab_growth_semantics(spark):
@@ -2731,15 +2765,6 @@ def test_refine_ann_index_warm_start(spark, tmp_path):
     assert occ == {c: surv.get(c, 0) for c in occ}
     # lists were rewritten over the FULL corpus
     assert lists.count() == emb.count()
-    # warm start works in BOTH centroid-state modes (round 12: the
-    # driver mode gained init_centroids support) and produces
-    # bit-identical results
-    a = kmeans_fit(emb, iters=1, centroid_state="recompute",
-                   init_centroids=want.select("cluster", "centroid"))
-    b = kmeans_fit(emb, iters=1, centroid_state="driver",
-                   init_centroids=want.select("cluster", "centroid"))
-    key = lambda r: (r["cluster"], tuple(r["centroid"]), r["n_vectors"])  # noqa: E731
-    assert sorted(map(key, a.collect())) == sorted(map(key, b.collect()))
 
 
 def test_interval_coverage_island_merge(spark):

@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import reset_between_queries, warm_session
 from daily_top_songs_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,26 +34,7 @@ def main() -> None:
     sc = spark.sparkContext
     registry = entrymod.queries()
 
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
-        "noop"
-    ).save()
-
-    def _identity(batches):
-        yield from batches
-
-    spark.range(1024).repartition(sc.defaultParallelism).mapInPandas(
-        _identity, "id long"
-    ).write.mode("overwrite").format("noop").save()
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        try:
-            entrymod._t(spark, SF_DIR, tbl).selectExpr(
-                "count(*)"
-            ).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+    warm_session(spark, SF_DIR)
 
     tracker = sc.statusTracker()
     for name in names:
@@ -75,12 +57,7 @@ def main() -> None:
                     if si is not None and si.numCompletedTasks > 0:
                         n_stages += 1
                         n_tasks += si.numCompletedTasks
-            spark.catalog.clearCache()
-            try:
-                for rdd in sc._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-            except Exception:
-                pass
+            reset_between_queries(spark, "jobcount_face")
             if run == 2:
                 print(
                     f"{name}: jobs={len(job_ids)} stages={n_stages} "

@@ -140,6 +140,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from daily_top_songs_etl_spark.pins import release_new_pins
     from daily_top_songs_etl_spark.session import get_spark
 
     spark = get_spark(app_name="oracle-sweep", shuffle_partitions=32)
@@ -208,8 +209,7 @@ def main() -> int:
             continue
         (green if ok else red).append(name if ok else {"name": name})
         print(("OK   " if ok else "RED  ") + f"{name} rows={n}", flush=True)
-        for (_, rdd) in spark.sparkContext._jsc.getPersistentRDDs().items():
-            rdd.unpersist()
+        release_new_pins(spark.sparkContext, set(), "oracle_sweep")
     result = {
         "sf_dir": args.sf_dir,
         "n_green": len(green),

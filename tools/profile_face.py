@@ -20,6 +20,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import reset_between_queries, warm_session
 from daily_top_songs_etl_spark.session import get_spark
 from daily_top_songs_etl_spark import catalog as catmod
 try:  # Spark 4: instances are the classic subclass, patch that
@@ -89,29 +90,7 @@ def main() -> None:
     _wrap(DataFrameWriter, "save", "writer.save")
 
     registry = entrymod.queries()
-    # bench-style warmup
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
-        "noop"
-    ).save()
-
-    def _identity(batches):
-        yield from batches
-
-    spark.range(1024).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_identity, "id long").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        try:
-            entrymod._t(spark, SF_DIR, tbl).selectExpr(
-                "count(*)"
-            ).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+    warm_session(spark, SF_DIR)
 
     for name in names:
         for run in (1, 2):
@@ -121,12 +100,7 @@ def main() -> None:
             t_build = time.perf_counter() - t0
             df.write.mode("overwrite").format("noop").save()
             t_total = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            try:
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-            except Exception:
-                pass
+            reset_between_queries(spark, "profile_face")
             if run == 2:
                 print(f"\n=== {name}: total {t_total:.3f}s "
                       f"(construct {t_build:.3f}s, "
