@@ -978,9 +978,11 @@ class Catalog:
         new version directory before the pointer flip, so data + metadata
         commit under the single pointer write — callers that need
         transactional bookkeeping alongside the state (e.g. the
-        IncrementalView applied-batch ledger) ride the same atomicity
-        instead of a second, separately-failing table write. Spark readers
-        ignore ``_``-prefixed files, so the sidecar never pollutes scans.
+        applied-batch ledger of ``streaming/quota_stream``) ride the same
+        atomicity instead of a second, separately-failing table write.
+        :meth:`stage_table` and :meth:`stage_partition_delta` take the
+        same ``meta`` for :meth:`commit_tables` (the matview ledger's
+        path). Spark readers ignore ``_``-prefixed files.
         """
         with self.writer_lock():
             new_v = self._write_version(df, table, meta, partition_by)

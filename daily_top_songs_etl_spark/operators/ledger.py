@@ -1,10 +1,11 @@
 """Bounded applied-batch ledger for exactly-once sinks.
 
-Every exactly-once face in the engine (IncrementalView / RetractableView
-state, the text-index ``__stats`` row, the ANN centroid occupancy table,
+Every exactly-once face in the engine (the four ``operators/matview``
+states, the text-index ``__stats`` row, the ANN centroid occupancy table,
 the CMS sketch state) guards its non-idempotent update with an
 applied-batch marker carried in the snapshot's ``_meta.json`` sidecar,
-committed under the catalog's single pointer flip. The round-6
+published with its state by one pointer flip (``Catalog.write``) or one
+``commit_tables`` manifest (the matviews' staged versions). The round-6
 implementations stored the FULL list of applied ids — correct, but a
 slow leak: at minute-cadence micro-batches the meta rewrite cost grows
 linearly forever (round-6 verdict, "What's wrong" #2). The single

@@ -53,29 +53,22 @@ def retention_cutoff(new_max_date: dt.date) -> dt.date:
         return new_max_date.replace(year=new_max_date.year - 1, day=28)
 
 
-def maintain(
-    tables: Tables,
-    new_max_date: dt.date | None = None,
-    materialize: bool = False,
-    broadcast_gc: bool = True,
-) -> Tables:
+def maintain(tables: Tables, new_max_date: dt.date | None = None) -> Tables:
     """Run T1 → cascade → T2 → T3 and return the new table states.
 
     ``new_max_date`` is the max ranking_date of the just-inserted batch
     (the trigger's NEW.ranking_date); None skips retention (no insert
     happened — e.g. a pure replay of the GC pass).
 
-    ``materialize=True`` eagerly localCheckpoints each GC'd DIMENSION
-    state (never the fact): the batch-commit path consumes every stage
+    Each GC'd DIMENSION state (never the fact) is eagerly
+    localCheckpointed: the batch-commit path consumes every stage
     several times (each dim write, plus the next stage's broadcast build
     side), and without pinning, Spark recomputes the whole cascade —
     including the fact-table distinct — once per consumer. Dimensions
     are broadcast-sized by the data model, so the pin is a few MB; the
-    caller should unpersist after its commit.
+    caller releases the pins after its commit.
 
-    ``broadcast_gc`` controls the GC semi-join build strategy.
-
-    True (default): force-broadcast each build side. Valid because the
+    Each GC semi-join force-broadcasts its build side. Valid because the
     build sides are DOMAIN-BOUNDED here, not merely assumed small: the
     distinct charted isrcs are capped by the CHECK-constrained rank
     domain (10 ranks × sources × ≤366 retained days —
@@ -86,21 +79,7 @@ def maintain(
     at 100 TB the alternative is shuffling the scaled fact during
     maintenance. (It also sidesteps a Spark 4 AQE artifact: a
     sort-merge semi-join over a union claiming propagated hash
-    partitioning zips 32-vs-64 partition RDDs.)
-
-    False: a deployment whose dims are NOT bounded by this data model
-    (wider rank domain, unboundedly many sources) drops the broadcast
-    hint — a shuffle join instead of a driver OOM. The build side is
-    pre-repartitioned on its join key (which also breaks the propagated
-    partitioning claim behind the AQE zip artifact above); the probe
-    side is left to the planner, which adds its own exchange — this is
-    NOT a co-located join, just a broadcast-free one. Pick this when
-    the distinct-key set can exceed executor/driver broadcast memory."""
-    _build = (
-        F.broadcast
-        if broadcast_gc
-        else (lambda side: side.repartition(*side.columns))
-    )
+    partitioning zips 32-vs-64 partition RDDs.)"""
     ranking = tables.ranking
     if new_max_date is not None:
         # T1: ranking_date <= NEW.ranking_date - INTERVAL '1 year' is purged
@@ -108,34 +87,23 @@ def maintain(
         cutoff = retention_cutoff(new_max_date)
         ranking = ranking.filter(F.col("ranking_date") > F.lit(cutoff))
 
-    # T2: songs must still be referenced by some ranking row. The build
-    # side (distinct charted isrcs) is bounded by the domain — 10 ranks ×
-    # sources × retained days — so every GC semi-join BROADCASTS its key
-    # set instead of shuffling the scaled fact/dim: the distinct
-    # partial-aggregates map-side to a dim-sized relation, and the big
-    # side never moves. (Also sidesteps a Spark 4 AQE artifact where a
-    # sort-merge semi-join over a union that claims propagated hash
-    # partitioning zips 32-vs-64 partition RDDs.)
+    # T2: songs must still be referenced by some ranking row. The
+    # distinct partial-aggregates map-side to a dim-sized relation that
+    # is broadcast, so the fact never moves.
     song = tables.song.join(
-        _build(ranking.select("isrc").distinct()), "isrc", "left_semi"
-    )
-    if materialize:
-        song = song.localCheckpoint(eager=True)
+        F.broadcast(ranking.select("isrc").distinct()), "isrc", "left_semi"
+    ).localCheckpoint(eager=True)
     # FK ON DELETE CASCADE song -> artist_song_map
     # (create_schema_structure.sql:49): map rows of deleted songs go too.
     artist_song_map = tables.artist_song_map.join(
-        _build(song.select("isrc")), "isrc", "left_semi"
-    )
-    if materialize:
-        artist_song_map = artist_song_map.localCheckpoint(eager=True)
+        F.broadcast(song.select("isrc")), "isrc", "left_semi"
+    ).localCheckpoint(eager=True)
     # T3: artists must still be mapped to some surviving song.
     artist = tables.artist.join(
-        _build(artist_song_map.select("artist_id").distinct()),
+        F.broadcast(artist_song_map.select("artist_id").distinct()),
         "artist_id",
         "left_semi",
-    )
-    if materialize:
-        artist = artist.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     return Tables(
         artist=artist, song=song, artist_song_map=artist_song_map, ranking=ranking
     )

@@ -187,9 +187,6 @@ def run_daily_batch(
         pre_pin_ids = snapshot_pins(sc)
 
         # Trigger cascade (T1→T2→T3) relative to the batch's max date.
-        # materialize=True pins each GC'd dimension so the cascade (and
-        # the fact distinct feeding it) runs once, not once per consumer
-        # below.
         new_max_date = max(inserted_dates, default=None)
         tables = maintain(
             Tables(
@@ -199,7 +196,6 @@ def run_daily_batch(
                 ranking=ranking_t.unionByName(ranking_ins),
             ),
             new_max_date,
-            materialize=True,
         )
 
         # Persist. The dimension deltas are cached and the fact delta

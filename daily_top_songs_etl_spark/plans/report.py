@@ -2,11 +2,13 @@
 
 Query side (``render_templates.py:139-152``): select
 (song, spotify_url, apple_music_url, delta) from the flagship delta view
-filtered to one date — the filter prunes straight to one ranking_date
-partition. Presentation side (``:156-195`` + ``templates/readme.md.jinja2``):
-markdown escaping (X7), embed-URL derivation (P9), delta display (X11:
-NULL→"—"-for-new… actually NULL→"new"? No: NULL renders as "—"? see below),
-and per-platform tables.
+filtered to one date. The filter does NOT prune partitions: ``date`` is
+the ORDER BY column of the view's ``lag()`` window, not a PARTITION BY
+column, so the executed ``FileScan`` has ``PartitionFilters: []`` and
+every report scans every retained date (ROADMAP.md direction 1).
+Presentation side (``:156-195`` + ``templates/readme.md.jinja2``):
+markdown escaping (X7), embed-URL derivation (P9), delta display (X11,
+rules below), and per-platform tables.
 
 Display rules from ``templates/readme.md.jinja2:13-23,31-41``:
 delta None → "new" (gap/first entry), > 0 → "+n", < 0 → "n" (sign already

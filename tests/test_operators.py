@@ -756,6 +756,10 @@ def test_retractable_view_deletes_and_exactly_once(spark, tmp_path):
         [("a", 1.0), ("a", 2.0), ("b", 10.0), ("c", 5.0), ("c", 7.0)],
         "k string, v double",
     )
+    # a delete with no state to negate is refused and writes nothing
+    with pytest.raises(ValueError, match="cannot retract"):
+        view.refresh(ins, "del-early", delete=True)
+    assert not cat.exists("totals")
     assert view.refresh(ins, "ins0") is True
     # delete one 'a' row and ALL of 'b'
     dele = spark.createDataFrame(
@@ -776,6 +780,45 @@ def test_retractable_view_deletes_and_exactly_once(spark, tmp_path):
     assert {
         r.k: r.sum_value for r in view.read().collect()
     }["b"] == 3.0
+
+
+@pytest.mark.parametrize("view_cls", ["IncrementalView", "RetractableView"])
+def test_matview_refresh_keeps_a_concurrent_commit(spark, tmp_path, view_cls):
+    """Two Catalog instances on one root: writer ``b`` tries to commit
+    while ``a`` is between reading the view state and writing its merge.
+    ``b`` must either be refused with ConcurrentWriterError or have its
+    batch survive; a merge computed from the state before ``b``'s
+    commit must never overwrite it (and drop its id from the ledger)."""
+    from daily_top_songs_etl_spark.catalog import Catalog, ConcurrentWriterError
+    from daily_top_songs_etl_spark.operators import matview
+
+    root = str(tmp_path / "wh")
+    cls = getattr(matview, view_cls)
+    a = cls(Catalog(spark, root), "mv", ["k"], "v")
+    b = cls(Catalog(spark, root), "mv", ["k"], "v")
+
+    def batch(v):
+        return spark.createDataFrame([("x", v)], "k string, v double")
+
+    assert a.refresh(batch(1.0), "b0")
+    real_read, interleaved, refused = a.catalog.read, [], []
+
+    def read_then_commit_b(table):
+        df = real_read(table)
+        if not interleaved:
+            interleaved.append(table)
+            try:
+                b.refresh(batch(2.0), "b1")
+            except ConcurrentWriterError:
+                refused.append(table)
+        return df
+
+    a.catalog.read = read_then_commit_b
+    assert a.refresh(batch(4.0), "b2")
+    assert interleaved
+    got = {r.k: (r.n_rows, r.sum_value) for r in a.read().collect()}
+    assert got == ({"x": (2, 5.0)} if refused else {"x": (3, 7.0)})
+    assert a.applied_count() == (2 if refused else 3)
 
 
 def test_lsh_recall_stats_bounds_and_planted_dups(spark):
@@ -1654,45 +1697,6 @@ def test_flush_trash_shutdown_stops_worker(spark, tmp_path):
         cat.write(spark.createDataFrame([(i,)], "k long"), "t")
     assert catmod._TRASH_POOL is not None
     catmod.flush_trash()
-
-
-def test_maintain_shuffle_fallback_matches_broadcast(spark):
-    """broadcast_gc=False (the unbounded-dim degrade path, round-9
-    ADVICE: a deployment whose dims outgrow driver memory must get a
-    shuffle join, not an OOM) produces identical cascade results, and
-    its plans contain no BroadcastExchange on the GC joins."""
-    artist = spark.createDataFrame(
-        [("A" * 22, "Old Artist"), ("B" * 22, "Current Artist")], schemas.ARTIST
-    )
-    song = _songs(
-        spark,
-        [
-            ("OLDI00000001", "Old Song", 1, False, "s1", None),
-            ("NEWI00000001", "New Song", 2, False, "s2", None),
-        ],
-    )
-    amap = spark.createDataFrame(
-        [("A" * 22, "OLDI00000001"), ("B" * 22, "NEWI00000001")],
-        schemas.ARTIST_SONG_MAP,
-    )
-    today = dt.date(2026, 8, 13)
-    ranking = spark.createDataFrame(
-        [
-            ("OLDI00000001", dt.date(2025, 8, 1), 1, "Spotify"),
-            ("NEWI00000001", today, 1, "Spotify"),
-        ],
-        schemas.RANKING,
-    )
-    t = Tables(artist, song, amap, ranking)
-    bc = maintain(t, new_max_date=today)
-    sh = maintain(t, new_max_date=today, broadcast_gc=False)
-    for name in ("artist", "song", "artist_song_map", "ranking"):
-        assert sorted(map(tuple, getattr(sh, name).collect())) == sorted(
-            map(tuple, getattr(bc, name).collect())
-        ), name
-    # the fallback plan must not carry the forced broadcast hint
-    plan = sh.artist._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in plan
 
 
 def test_partitioned_incremental_view_partition_scoped_refresh(spark, tmp_path):
