@@ -16,6 +16,10 @@ before ``array_join`` is mandatory (SURVEY.md §7.4.2).
 
 Scale note: both inputs are dimensions (bounded by distinct charted songs),
 so the joins broadcast; the groupBy shuffles only the tiny bridge table.
+
+The result also carries the song's two URL columns, so a view that shows
+the label and the links broadcasts the ``song`` dimension once; column
+pruning drops them where no caller selects them.
 """
 
 from __future__ import annotations
@@ -25,7 +29,8 @@ from pyspark.sql import functions as F
 
 
 def song_info(artist: DataFrame, song: DataFrame, artist_song_map: DataFrame) -> DataFrame:
-    """One row per isrc: ``song_info = 'A, B - Title'``."""
+    """One row per isrc: ``song_info = 'A, B - Title'``, with the song's
+    ``spotify_url`` and ``apple_music_url``."""
     artists_per_song = (
         artist_song_map.join(F.broadcast(artist), "artist_id", "inner")
         .groupBy("isrc")
@@ -44,4 +49,6 @@ def song_info(artist: DataFrame, song: DataFrame, artist_song_map: DataFrame) ->
         F.concat(F.col("artist_names"), F.lit(" - "), F.col("song_name")).alias(
             "song_info"
         ),
+        "spotify_url",
+        "apple_music_url",
     )

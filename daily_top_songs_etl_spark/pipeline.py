@@ -24,6 +24,18 @@ is a Python RDD: every re-run is a Python-worker pass). Each dimension's
 RETURNING set is cached as well, so the maintain pins and the CSV mirror
 share one anti-join. All of these caches are released before the call
 returns; the returned deltas stay lazy over the caller's batch.
+
+A fifth table rides the same commit: ``song_last_charted(isrc,
+last_date)``, ``max(ranking_date)`` per isrc of the committed fact, the
+state T2 probes instead of scanning the fact (operators/maintain.py).
+Each run updates it as ``max(state, inserted rows)`` and maintain()
+applies T1's cutoff to it. Its ``_meta.json`` records the ``ranking``
+version it describes. A run trusts the state only when that version is
+the current one; otherwise (no state yet, a seed load, or a ``ranking``
+commit by any other writer) maintain() derives it once from the fact
+and the run commits it. A writer that appended to ``ranking`` in place
+(``Catalog.append*``) would keep the version and so is not detected;
+nothing appends to ``ranking``.
 """
 
 from __future__ import annotations
@@ -38,11 +50,21 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .pins import release_new_pins, snapshot_pins
-from .operators.maintain import Tables, maintain, retention_cutoff
+from .operators.maintain import Tables, last_charted, maintain, retention_cutoff
 from .operators.topk import assign_positional_ranks
 from .operators.upsert import merge_song, upsert
 from .operators.validate import validate_ranking
 from .sources.sinks import write_csv_mirror
+
+
+#: the last-charted state's table (module docstring)
+LAST_CHARTED = "song_last_charted"
+
+
+def _last_charted_version(catalog: Catalog) -> int | None:
+    """The ``ranking`` version the committed last-charted state
+    describes (None without a state)."""
+    return (catalog.read_meta(LAST_CHARTED) or {}).get("ranking_version")
 
 
 @dataclass
@@ -80,6 +102,10 @@ def run_daily_batch(
         song_t = catalog.read("song")
         map_t = catalog.read("artist_song_map")
         ranking_t = catalog.read("ranking")
+        state_valid = (
+            catalog.exists("ranking")
+            and _last_charted_version(catalog) == catalog.current_version("ranking")
+        )
 
         # Wave 1a — artists: explode the nested struct array (P5,
         # etl_pipeline.py:607-611), upsert on artist_id.
@@ -186,6 +212,21 @@ def run_daily_batch(
         # catalog.
         pre_pin_ids = snapshot_pins(sc)
 
+        # The last-charted state of the fact after the insert:
+        # max(committed state, inserted rows) per isrc. An untrusted
+        # state is left to maintain() to derive from the fact. Both
+        # inputs are bounded by the rank domain (ranks × sources ×
+        # retained days), so the merge runs in one partition, which
+        # already satisfies the aggregate's distribution: no shuffle.
+        state = None
+        if state_valid:
+            state = last_charted(
+                catalog.read(LAST_CHARTED)
+                .select("isrc", F.col("last_date").alias("ranking_date"))
+                .unionByName(ranking_ins.select("isrc", "ranking_date"))
+                .coalesce(1)
+            )
+
         # Trigger cascade (T1→T2→T3) relative to the batch's max date.
         new_max_date = max(inserted_dates, default=None)
         tables = maintain(
@@ -194,6 +235,7 @@ def run_daily_batch(
                 song=song_res.table,
                 artist_song_map=map_res.table,
                 ranking=ranking_t.unionByName(ranking_ins),
+                song_last_charted=state,
             ),
             new_max_date,
         )
@@ -223,13 +265,13 @@ def run_daily_batch(
                     columns=schemas.TABLE_SCHEMAS[name].fieldNames(),
                 )
 
-        # One snapshot-consistent commit across all four tables — the
-        # Spark analog of the reference wrapping its four upsert waves in
-        # a single Postgres transaction (etl_pipeline.py:898-911).
-        # Sequential catalog.write calls left a crash window where the
-        # new song table was visible next to the old artist_song_map;
-        # commit_tables publishes all four under one intent manifest
-        # with roll-forward recovery.
+        # One snapshot-consistent commit across all four tables (and the
+        # last-charted state) — the Spark analog of the reference
+        # wrapping its four upsert waves in a single Postgres
+        # transaction (etl_pipeline.py:898-911). Sequential catalog.write
+        # calls left a crash window where the new song table was visible
+        # next to the old artist_song_map; commit_tables publishes them
+        # all under one intent manifest with roll-forward recovery.
         #
         # The fact table commits PARTITION-SCOPED: a daily batch touches
         # the batch's date partitions and the T1 purge drops a trailing
@@ -277,34 +319,41 @@ def _commit_batch(catalog, tables, deltas, inserted_dates, new_max_date):
     (runs under the caller's held writer lock — the nested catalog calls
     below re-enter it). The partition bookkeeping is driver metadata:
     the touched dates come from the caller's one collect, and the purged
-    dates from the snapshot's ``ranking_date=`` directory names."""
+    dates from the snapshot's ``ranking_date=`` directory names. The
+    last-charted state is written whenever ``ranking`` gets a new
+    version or the committed state does not describe the current one."""
     dims = {
         "artist": tables.artist,
         "song": tables.song,
         "artist_song_map": tables.artist_song_map,
     }
+    staged = {}
     if not catalog.exists("ranking"):
-        catalog.commit_tables({**dims, "ranking": tables.ranking})
-        return deltas
-    if new_max_date is not None:
-        # the same cutoff maintain()'s T1 filter applied
-        cutoff = retention_cutoff(new_max_date)
-        purged = [d for d in catalog.partition_values("ranking") if d <= cutoff]
-        touched = [d for d in inserted_dates if d > cutoff]
+        staged["ranking"] = catalog.stage_table(tables.ranking, "ranking")
     else:
-        purged, touched = [], inserted_dates
-    if not touched and not purged:
-        # ranking is bit-identical to the current snapshot — commit
-        # only the dimensions (their upsert deltas may be non-empty)
-        catalog.commit_tables(dims)
-        return deltas
-    # touched is never empty here: a purge implies >=1 inserted row,
-    # and the max inserted date is always > its own 1-year cutoff
-    staged_v = catalog.stage_partition_delta(
-        tables.ranking.filter(F.col("ranking_date").isin(touched)),
-        "ranking",
-        touched,
-        drop=purged,
-    )
-    catalog.commit_tables(dims, staged={"ranking": staged_v})
+        if new_max_date is not None:
+            # the same cutoff maintain()'s T1 filter applied
+            cutoff = retention_cutoff(new_max_date)
+            purged = [d for d in catalog.partition_values("ranking") if d <= cutoff]
+            touched = [d for d in inserted_dates if d > cutoff]
+        else:
+            purged, touched = [], inserted_dates
+        # With nothing touched or purged, ranking is bit-identical to the
+        # current snapshot and only the dimensions commit (their upsert
+        # deltas may be non-empty). touched is never empty otherwise: a
+        # purge implies >=1 inserted row, and the max inserted date is
+        # always > its own 1-year cutoff.
+        if touched or purged:
+            staged["ranking"] = catalog.stage_partition_delta(
+                tables.ranking.filter(F.col("ranking_date").isin(touched)),
+                "ranking",
+                touched,
+                drop=purged,
+            )
+    ranking_v = staged.get("ranking", catalog.current_version("ranking"))
+    metas = None
+    if ranking_v != _last_charted_version(catalog):
+        dims[LAST_CHARTED] = tables.song_last_charted
+        metas = {LAST_CHARTED: {"ranking_version": ranking_v}}
+    catalog.commit_tables(dims, metas, staged=staged)
     return deltas

@@ -2,10 +2,14 @@
 
 Query side (``render_templates.py:139-152``): select
 (song, spotify_url, apple_music_url, delta) from the flagship delta view
-filtered to one date. The filter does NOT prune partitions: ``date`` is
-the ORDER BY column of the view's ``lag()`` window, not a PARTITION BY
-column, so the executed ``FileScan`` has ``PartitionFilters: []`` and
-every report scans every retained date (ROADMAP.md direction 1).
+filtered to one date. The filter prunes partitions on both sides of the
+view's delta self-join: it reaches the current-day scan as
+``ranking_date = day``, and Spark infers ``date_add(ranking_date, 1) =
+day`` for the previous-day scan, so each executed ``FileScan`` carries a
+non-empty ``PartitionFilters`` and a report reads two date partitions
+whatever the retained history. The ≤ 2 × 10 result rows (the rank CHECK
+bounds them) are sorted in one partition, so no range-partition sampling
+job runs.
 Presentation side (``:156-195`` + ``templates/readme.md.jinja2``):
 markdown escaping (X7), embed-URL derivation (P9), delta display (X11,
 rules below), and per-platform tables.
@@ -32,7 +36,8 @@ from ..functions.strings import escape_markdown
 
 def report_rows(delta_view: DataFrame, date: dt.date) -> DataFrame:
     """The report query (F4 filter + X7/X11 display columns), fully planned
-    in Spark; returns one ordered row per (platform, rank)."""
+    in Spark; returns one ordered row per (platform, rank), in a single
+    partition."""
     delta_display = (
         F.when(F.col("delta").isNull(), "new")
         .when(F.col("delta") > 0, F.concat(F.lit("+"), F.col("delta").cast("string")))
@@ -49,7 +54,8 @@ def report_rows(delta_view: DataFrame, date: dt.date) -> DataFrame:
             "apple_music_url",
             delta_display.alias("delta_display"),
         )
-        .orderBy(source_ordinal("platform"), "rank")
+        .coalesce(1)
+        .sortWithinPartitions(source_ordinal("platform"), "rank")
     )
 
 

@@ -7,17 +7,19 @@ Re-expressions of ``create_schema_behavior.sql:96-156`` (views) and ``:36-54``
   against the ``song_info`` DataFrame (functions/song_info.py);
 - ``ORDER BY ranking_source`` uses the enum-declaration ordinal
   (functions/enum_order.py), never a raw string sort;
-- the flagship delta is a single window over (source, isrc) — one shuffle,
-  partitioned exactly like the fact table's natural key, so at 100 TB the
-  window never sees skew beyond one song's history (≤365 rows after
-  retention).
+- the flagship delta is a left self-join of the fact with itself shifted
+  by one day, on the UNIQUE key ``(isrc, ranking_date, ranking_source)``.
+  Unlike a ``lag()`` window ordered by date, the join keeps the date a
+  join key: a filter on the view's ``date`` reaches the left scan, and
+  Spark infers ``date_add(ranking_date, 1) = day`` for the right one, so
+  a one-day query reads two date partitions, not the retained history.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.enum_order import source_ordinal
@@ -55,19 +57,13 @@ def all_rankings_with_urls_view(
     ranking: DataFrame, artist: DataFrame, song: DataFrame, artist_song_map: DataFrame
 ) -> DataFrame:
     """create_schema_behavior.sql:110-126 — + LEFT JOIN song for URLs."""
-    info = song_info(artist, song, artist_song_map)
-    urls = song.select("isrc", "spotify_url", "apple_music_url")
-    out = (
-        ranking.join(F.broadcast(urls), "isrc", "left")
-        .join(F.broadcast(info), "isrc", "left")
-        .select(
-            F.col("ranking_date").alias("date"),
-            F.col("ranking_source").alias("platform"),
-            F.col("rank"),
-            F.col("song_info").alias("song"),
-            "spotify_url",
-            "apple_music_url",
-        )
+    out = _with_song_label(ranking, song_info(artist, song, artist_song_map)).select(
+        F.col("ranking_date").alias("date"),
+        F.col("ranking_source").alias("platform"),
+        F.col("rank"),
+        F.col("song_info").alias("song"),
+        "spotify_url",
+        "apple_music_url",
     )
     return _view_order(out)
 
@@ -82,29 +78,31 @@ def all_rankings_with_delta_view(
     NULL, rendered as "new" downstream (SURVEY.md §2.7 W1-W3).
     Sign convention: positive = moved up.
     """
-    w = Window.partitionBy("ranking_source", "isrc").orderBy("ranking_date")
-    prev_date = F.lag("ranking_date").over(w)
-    prev_rank = F.lag("rank").over(w)
-    delta = F.when(
-        F.col("ranking_date") == F.date_add(prev_date, 1),
-        prev_rank - F.col("rank"),
-    ).otherwise(F.lit(None).cast("int"))
-
-    info = song_info(artist, song, artist_song_map)
-    urls = song.select("isrc", "spotify_url", "apple_music_url")
-    out = (
-        ranking.withColumn("delta", delta)
-        .join(F.broadcast(urls), "isrc", "left")
-        .join(F.broadcast(info), "isrc", "left")
-        .select(
-            F.col("ranking_date").alias("date"),
-            F.col("ranking_source").alias("platform"),
-            F.col("rank"),
-            F.col("song_info").alias("song"),
-            "spotify_url",
-            "apple_music_url",
-            "delta",
-        )
+    prev = ranking.select(
+        F.col("isrc").alias("p_isrc"),
+        F.col("ranking_source").alias("p_source"),
+        F.col("rank").alias("prev_rank"),
+        F.date_add("ranking_date", 1).alias("next_date"),
+    )
+    # The key (isrc, ranking_date, ranking_source) is UNIQUE, so each row
+    # matches at most the one row of the same song and platform on the
+    # day before: exactly the row lag() returns when the dates are
+    # consecutive, and no row (NULL delta) on a gap or a first entry.
+    with_delta = ranking.join(
+        prev,
+        (F.col("isrc") == F.col("p_isrc"))
+        & (F.col("ranking_source") == F.col("p_source"))
+        & (F.col("ranking_date") == F.col("next_date")),
+        "left",
+    ).withColumn("delta", F.col("prev_rank") - F.col("rank"))
+    out = _with_song_label(with_delta, song_info(artist, song, artist_song_map)).select(
+        F.col("ranking_date").alias("date"),
+        F.col("ranking_source").alias("platform"),
+        F.col("rank"),
+        F.col("song_info").alias("song"),
+        "spotify_url",
+        "apple_music_url",
+        "delta",
     )
     return _view_order(out)
 

@@ -302,16 +302,20 @@ def test_window_rank_family_single_window_operator(spark):
     assert n_exchanges == 1
 
 
-def test_flagship_delta_view_single_window_shuffle_sf01(spark, tmp_path):
+def test_flagship_delta_view_matches_lag_and_day_report_prunes_sf01(spark, tmp_path):
     """The flagship delta view over an sf0.1 events-derived ranking table:
-    ONE hashpartitioning Exchange (the (source,isrc) window — the
-    reference's composite-index analogue, create_schema_behavior.sql:10-12),
-    dims broadcast, and the ranking scan pruned to consumed columns. The
-    trailing rangepartitioning Exchange is the view's presentation sort.
+    its rows equal the ``lag()`` formulation of the reference
+    (create_schema_behavior.sql:128-156), a one-day report prunes both
+    sides of the delta self-join to date partitions, and the ranking
+    scans are pruned to consumed columns.
     """
+    import re
+
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from daily_top_songs_etl_spark.operators.topk import top_k_per_group
+    from daily_top_songs_etl_spark.plans.report import report_rows
     from daily_top_songs_etl_spark.plans.views import (
         all_rankings_with_delta_view,
     )
@@ -359,24 +363,39 @@ def test_flagship_delta_view_single_window_shuffle_sf01(spark, tmp_path):
     amap = spark.read.parquet(str(tmp_path / "amap"))
 
     view = all_rankings_with_delta_view(ranking, artist, song, amap)
-    plan = view._jdf.queryExecution().executedPlan().toString()
-
-    hash_ex = [
-        l for l in plan.splitlines() if "Exchange hashpartitioning" in l
-    ]
-    # Fact side: exactly ONE shuffle — the (source, isrc) window. The only
-    # other hash exchange allowed is song_info's groupBy over the tiny
-    # artist bridge table (dim-bounded, documented in functions/song_info).
-    fact_ex = [l for l in hash_ex if "ranking_source" in l]
-    assert len(fact_ex) == 1, hash_ex
-    assert len(hash_ex) <= 2, hash_ex
-    assert plan.count("BroadcastHashJoin") >= 2  # urls + song_info dims
-    read = next(
-        l for l in plan.splitlines()
-        if "ReadSchema" in l and "isrc" in l and "rank" in l
+    w = Window.partitionBy("ranking_source", "isrc").orderBy("ranking_date")
+    lag_delta = F.when(
+        F.col("ranking_date") == F.date_add(F.lag("ranking_date").over(w), 1),
+        F.lag("rank").over(w) - F.col("rank"),
     )
-    assert "unused_wide_col" not in read  # column pruning reached the scan
-    assert len(view.take(5)) == 5
+    want = ranking.select(
+        F.col("ranking_date").alias("date"),
+        F.col("ranking_source").alias("platform"),
+        "rank",
+        lag_delta.alias("delta"),
+    ).collect()
+    got = view.select("date", "platform", "rank", "delta").collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, want), key=repr)
+    assert any(r.delta is not None for r in got) and any(r.delta is None for r in got)
+
+    day = max(r.date for r in got)
+    report = report_rows(view, day)
+    assert len(report.collect()) == 10
+    plan = report._jdf.queryExecution().executedPlan().toString()
+    scans = [
+        line for line in plan.splitlines()
+        if "FileScan" in line and "ranking_date#" in line
+    ]
+    filters = {
+        re.sub(r"#\d+", "", re.search(r"PartitionFilters: \[([^\]]*)", line).group(1))
+        for line in scans
+    }
+    assert filters == {
+        f"isnotnull(ranking_date), (ranking_date = {day})",
+        f"(date_add(ranking_date, 1) = {day}), isnotnull(date_add(ranking_date, 1))",
+    }, plan
+    # column pruning reached both scans
+    assert scans and not any("unused_wide_col" in line for line in scans)
 
 
 def test_catalog_date_filter_prunes_partitions(spark, tmp_path):

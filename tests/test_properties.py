@@ -500,6 +500,158 @@ def test_load_date_is_stamped_once_per_batch(spark, tmp_path, monkeypatch):
     assert _ranking_keys(cat) == [("ZZLEAP000000", first), ("ZZLEAP000001", first)]
 
 
+def _assert_last_charted(cat: Catalog) -> dict[str, dt.date]:
+    """The committed last-charted state describes the current ``ranking``
+    version and equals ``max(ranking_date)`` per isrc of the fact."""
+    from daily_top_songs_etl_spark.pipeline import LAST_CHARTED
+
+    assert cat.read_meta(LAST_CHARTED)["ranking_version"] == cat.current_version("ranking")
+    got = {r.isrc: r.last_date for r in cat.read(LAST_CHARTED).collect()}
+    want = {
+        r[0]: r[1]
+        for r in cat.read("ranking").groupBy("isrc").agg(F.max("ranking_date")).collect()
+    }
+    assert got == want
+    return got
+
+
+def _songs(cat: Catalog) -> set[str]:
+    return {r.isrc for r in cat.read("song").collect()}
+
+
+def test_last_charted_state_tracks_the_fact(spark, tmp_path):
+    """The last-charted state equals the fact's per-isrc max date after a
+    seed, a leap-day run that purges, and its replay; a song whose only
+    ranking row fails validation is GC'd."""
+    from daily_top_songs_etl_spark.pipeline import LAST_CHARTED
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    seed = [
+        _chart_row(dt.date(2023, 2, 27), 0),
+        _chart_row(dt.date(2023, 2, 28), 1),
+        _chart_row(dt.date(2023, 3, 1), 2),
+    ]
+    run_daily_batch(cat, spark.createDataFrame(seed, LANDING_SCHEMA))
+    _assert_last_charted(cat)
+
+    # 2024-02-29: the cutoff is 2023-02-28, so the rows of songs 0 and 1
+    # go. Song 1 charts again that day, song 2 keeps its March row, and
+    # song 5's only ranking row has rank 11 and fails the CHECK.
+    leap = dt.date(2024, 2, 29)
+    invalid = (10, *_chart_row(leap, 5)[1:])
+    batch = [_chart_row(leap, 1), _chart_row(leap, 4), invalid]
+    run_daily_batch(cat, spark.createDataFrame(batch, LANDING_SCHEMA))
+    kept = {f"ZZLEAP00000{n}" for n in (1, 2, 4)}
+    assert set(_assert_last_charted(cat)) == kept
+    assert _songs(cat) == kept
+
+    # a replay inserts nothing and leaves the state's snapshot alone
+    state_v = cat.current_version(LAST_CHARTED)
+    run_daily_batch(cat, spark.createDataFrame(batch, LANDING_SCHEMA))
+    assert cat.current_version(LAST_CHARTED) == state_v
+    assert _assert_last_charted(cat)["ZZLEAP000001"] == leap
+    assert _songs(cat) == kept
+
+
+def test_last_charted_state_rederived_after_a_foreign_ranking_write(spark, tmp_path):
+    """A ``ranking`` commit by another writer leaves the state describing
+    an older version. The next run must not trust it: song 0's state
+    entry says it last charted on a date the run purges, but a row
+    written with ``Catalog.write`` keeps it charted."""
+    from daily_top_songs_etl_spark import schemas
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    seed = [_chart_row(dt.date(2024, 1, 10), 0), _chart_row(dt.date(2024, 6, 1), 1)]
+    run_daily_batch(cat, spark.createDataFrame(seed, LANDING_SCHEMA))
+    extra = spark.createDataFrame(
+        [("ZZLEAP000000", dt.date(2024, 12, 1), 1, "Spotify")], schemas.RANKING
+    )
+    cat.write(cat.read("ranking").unionByName(extra), "ranking")
+
+    # cutoff 2024-01-15 purges song 0's January row, not its December one
+    run_daily_batch(
+        cat, spark.createDataFrame([_chart_row(dt.date(2025, 1, 15), 2)], LANDING_SCHEMA)
+    )
+    assert _songs(cat) == {"ZZLEAP000000", "ZZLEAP000001", "ZZLEAP000002"}
+    assert _assert_last_charted(cat)["ZZLEAP000000"] == dt.date(2024, 12, 1)
+
+
+def test_daily_op_scans_do_not_grow_with_history(spark, tmp_path, monkeypatch):
+    """One day plus its report on a 30-date and a 90-date catalog: the
+    maintain cascade and the report run the same jobs and tasks on both,
+    and the report's two ``ranking`` scans carry partition filters. An
+    open cost above the split size gives every file its own scan task,
+    so the task counts measure the files read (one per date partition)."""
+    day = dt.date(2025, 6, 1)
+    open_cost = "spark.sql.files.openCostInBytes"
+    was = spark.conf.get(open_cost)
+    spark.conf.set(open_cost, str(1 << 30))
+    try:
+        counts = _scan_bound_counts(spark, tmp_path, monkeypatch, day)
+    finally:
+        spark.conf.set(open_cost, was)
+    assert counts[30] == counts[90], counts
+
+
+def _scan_bound_counts(spark, tmp_path, monkeypatch, day):
+    """{history dates: ((jobs, tasks) of maintain, (jobs, tasks) of the
+    report)} for one day run on each catalog."""
+    import re
+
+    from daily_top_songs_etl_spark import pipeline
+    from daily_top_songs_etl_spark.plans.report import report_rows
+    from daily_top_songs_etl_spark.plans.views import all_rankings_with_delta_view
+    from tools.maintain_replay_bench import _job_counts
+
+    sc = spark.sparkContext
+    real_maintain = pipeline.maintain
+    counts = {}
+    for n in (30, 90):
+        cat = Catalog(spark, str(tmp_path / f"wh{n}"))
+        # one row per date; song k charts on three consecutive days
+        history = [_chart_row(day - dt.timedelta(days=i), i // 3) for i in range(1, n + 1)]
+        run_daily_batch(cat, spark.createDataFrame(history, LANDING_SCHEMA))
+
+        def grouped(*args, n=n):
+            sc.setJobGroup(f"maintain-{n}", "maintain")
+            try:
+                return real_maintain(*args)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        monkeypatch.setattr(pipeline, "maintain", grouped)
+        run_daily_batch(cat, spark.createDataFrame([_chart_row(day, 0)], LANDING_SCHEMA))
+        monkeypatch.setattr(pipeline, "maintain", real_maintain)
+
+        view = all_rankings_with_delta_view(
+            *(cat.read(t) for t in ("ranking", "artist", "song", "artist_song_map"))
+        )
+        report = report_rows(view, day)
+        sc.setJobGroup(f"report-{n}", "report")
+        try:
+            rows = report.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [(r.rank, r.delta_display) for r in rows] == [(1, "—")]
+        # the plan prints each scan in the initial and the final AQE plan
+        plan = report._jdf.queryExecution().executedPlan().toString()
+        filters = {
+            re.sub(r"#\d+", "", m.group(1))
+            for m in re.finditer(
+                r"FileScan parquet \[[^\]]*ranking_date#.*?PartitionFilters: \[([^\]]*)", plan
+            )
+        }
+        assert filters == {
+            f"isnotnull(ranking_date), (ranking_date = {day})",
+            f"(date_add(ranking_date, 1) = {day}), isnotnull(date_add(ranking_date, 1))",
+        }, plan
+        counts[n] = (
+            _job_counts(sc, f"maintain-{n}"),
+            _job_counts(sc, f"report-{n}"),
+        )
+    return counts
+
+
 @settings(
     max_examples=5,
     deadline=None,

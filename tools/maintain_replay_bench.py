@@ -5,7 +5,7 @@ shape: ``db/init.sh:228-252`` rebuilds the whole schema from flat files,
 leaving >1 year of un-purged history that the NEXT daily batch's triggers
 must reduce), then replays THREE daily batches through the real pipeline
 (``run_daily_batch`` → upsert waves → T1 retention → T2/T3 GC →
-snapshot-consistent 4-table commit) and checks the final table identities
+snapshot-consistent multi-table commit) and checks the final table identities
 against a pure-Python model of the reference's trigger semantics — the
 same model as tests/test_properties.py::test_multi_day_replay, evaluated
 at scale.
