@@ -36,6 +36,34 @@ commit by any other writer) maintain() derives it once from the fact
 and the run commits it. A writer that appended to ``ranking`` in place
 (``Catalog.append*``) would keep the version and so is not detected;
 nothing appends to ``ranking``.
+
+No-change path: a batch none of whose RETURNING sets can be non-empty
+(an exact replay of a committed day) commits nothing, as ``ON CONFLICT
+DO NOTHING`` fires no trigger in the reference. ``run_daily_batch``
+returns empty deltas, runs no cascade, appends no mirror and publishes no
+version of any table. It decides this from the batch's rows (the one
+collect it takes anyway) and at most one probe job, and only when all of
+these hold:
+
+- the last-charted state is trusted (above);
+- each dimension snapshot is the one a run published. A run writes
+  ``{"daily_batch_version": v}`` into each dimension's ``_meta.json``,
+  ``v`` being the version that snapshot is published as. Any other
+  writer's snapshot names no version, or, if it copied ``read_meta()``
+  into ``write(meta=...)``, the version before its own. Without an
+  insert the full path's only effect is T2/T3 GC, and a run's
+  dimensions are already GC-closed against the state it commits, so the
+  guard is what makes skipping the cascade exact. In-place appends keep
+  the version, as for ``ranking``; nothing appends to the dimensions;
+- every batch date is a committed ``ranking`` partition (a listing);
+- the probe, one collect over ``ranking`` (pruned to the batch's dates),
+  ``song``, ``artist_song_map`` and ``artist`` filtered to the batch's
+  keys, finds every key the upserts would insert and no NULL
+  ``apple_music_url`` that ``merge_song`` would patch.
+
+A row that fails validation is never in ``ranking``, so a batch holding
+one takes the full path, which gives the same tables: the gate is
+conservative, never wrong.
 """
 
 from __future__ import annotations
@@ -59,12 +87,74 @@ from .sources.sinks import write_csv_mirror
 
 #: the last-charted state's table (module docstring)
 LAST_CHARTED = "song_last_charted"
+#: the dimension tables every run publishes together
+DIMENSIONS = ("artist", "song", "artist_song_map")
+#: a dimension ``_meta.json`` key: the version a run published the
+#: snapshot as (module docstring, no-change path)
+PUBLISHED_AS = "daily_batch_version"
 
 
 def _last_charted_version(catalog: Catalog) -> int | None:
     """The ``ranking`` version the committed last-charted state
     describes (None without a state)."""
     return (catalog.read_meta(LAST_CHARTED) or {}).get("ranking_version")
+
+
+def _dims_published_by_a_run(catalog: Catalog) -> bool:
+    """Whether each dimension's current snapshot names its own version
+    under :data:`PUBLISHED_AS`, as only a run's commit writes it."""
+    for table in DIMENSIONS:
+        v = catalog.current_version(table)
+        if v is None or (catalog.read_meta(table) or {}).get(PUBLISHED_AS) != v:
+            return False
+    return True
+
+
+def _nothing_new(catalog: Catalog, rows: list, batch_dates: list) -> bool:
+    """Whether no upsert wave of a batch inserts or patches a row: every
+    ``(isrc, date, source)`` key is in ``ranking``, every isrc in
+    ``song`` without a NULL ``apple_music_url`` that a batch row could
+    fill (``merge_song``), every artist in ``artist`` and every
+    ``(artist, isrc)`` pair in ``artist_song_map``. ``rows`` are the
+    batch rows :func:`run_daily_batch` collects. One collect reads the
+    four tables filtered to the batch's keys, so it returns at most a
+    batch's worth of rows per table."""
+    isrcs = sorted({r.isrc for r in rows} - {None})
+    pairs = {(a, r.isrc) for r in rows for a in r.artist_ids or ()}
+    has_isrc = F.col("isrc").isin(isrcs)
+    no_str, no_date = F.lit(None).cast("string"), F.lit(None).cast("date")
+    probe = (
+        catalog.read("ranking")
+        .filter(F.col("ranking_date").isin(batch_dates) & has_isrc)
+        .select(F.lit("ranking"), "isrc", "ranking_source", "ranking_date")
+        .union(
+            catalog.read("song")
+            .filter(has_isrc)
+            .select(F.lit("song"), "isrc", "apple_music_url", no_date)
+        )
+        .union(
+            catalog.read("artist_song_map")
+            .filter(has_isrc)
+            .select(F.lit("artist_song_map"), "isrc", "artist_id", no_date)
+        )
+        .union(
+            catalog.read("artist")
+            .filter(F.col("artist_id").isin(sorted({a for a, _ in pairs} - {None})))
+            .select(F.lit("artist"), "artist_id", no_str, no_date)
+        )
+    )
+    found: dict[str, list] = {t: [] for t in ("ranking", *DIMENSIONS)}
+    for table, *key in probe.collect():
+        found[table].append(key)
+    url = {isrc: u for isrc, u, _ in found["song"]}
+    return (
+        {(r.isrc, r.ranking_date, r.source) for r in rows}
+        <= {(isrc, d, src) for isrc, src, d in found["ranking"]}
+        and all(r.isrc in url for r in rows)
+        and all(url[r.isrc] is not None for r in rows if r.apple_music_url is not None)
+        and {a for a, _ in pairs} <= {a for a, _, _ in found["artist"]}
+        and pairs <= {(a, isrc) for isrc, a, _ in found["artist_song_map"]}
+    )
 
 
 @dataclass
@@ -90,7 +180,16 @@ def run_daily_batch(
     """Apply one daily batch (DAILY_BATCH schema) to the star schema.
 
     The batch is evaluated once (see the module docstring). A batch the
-    caller already persisted keeps its cache after the call."""
+    caller already persisted keeps its cache after the call.
+
+    A batch that can insert or patch nothing (an exact replay) takes the
+    no-change path: it returns empty deltas and publishes no version of
+    any table, writes no mirror file and runs no cascade. The gate is the
+    trusted last-charted state, dimension snapshots that a run published
+    (their ``daily_batch_version`` guard), batch dates that are all
+    committed ``ranking`` partitions, and one probe collect that finds
+    every batch key already stored (module docstring). Any other batch
+    takes the full path."""
     owns_cache = daily_batch.storageLevel == StorageLevel.NONE
     if owns_cache:
         daily_batch.persist()
@@ -172,14 +271,20 @@ def run_daily_batch(
             "rank",
             F.col("source").alias("ranking_source"),
         )
-        # The batch's dates, from the first action on the persisted batch
+        # The batch's keys, from the first action on the persisted batch
         # (it fills the cache: no extra pass over the caller's lineage).
         # Taken before validation, whose F8 check reads current_date and
         # so may differ between actions; a superset of the inserted
-        # dates keeps the pruned conflict check exact either way.
-        batch_dates = sorted(
-            {r[0] for r in facts.select("ranking_date").collect()} - {None}
-        )
+        # dates keeps the pruned conflict check exact either way. The
+        # same rows decide the no-change path below.
+        rows = daily_batch.select(
+            "isrc",
+            date_col.cast("date").alias("ranking_date"),
+            "source",
+            "apple_music_url",
+            F.col("artists.artist_id").alias("artist_ids"),
+        ).collect()
+        batch_dates = sorted({r.ranking_date for r in rows} - {None})
         ranking_batch = validate_ranking(facts)
         # The key contains ranking_date, so only rows on the batch's
         # dates can conflict: the anti-join reads those partitions only.
@@ -190,6 +295,25 @@ def run_daily_batch(
             ranking_batch,
             ["isrc", "ranking_date", "ranking_source"],
         )
+
+        # The no-change path (module docstring): the gate's driver-side
+        # checks first, so a new day, whose date is no partition yet,
+        # runs no probe.
+        if (
+            state_valid
+            and _dims_published_by_a_run(catalog)
+            and set(batch_dates) <= set(catalog.partition_values("ranking"))
+            and _nothing_new(catalog, rows, batch_dates)
+        ):
+            # limit(0) keeps each delta's schema and plans as an empty
+            # relation, so reading it runs no anti-join
+            return BatchDeltas(
+                artist=artist_res.inserted.limit(0),
+                song_inserted=song_res.inserted.limit(0),
+                song_updated=song_res.updated.limit(0),
+                artist_song_map=map_res.inserted.limit(0),
+                ranking=ranking_res.inserted.limit(0),
+            )
 
         # Pin the batch-sized RETURNING set once: the date listing, the
         # fact union, the mirror and the staged write all consume it, and
@@ -322,11 +446,12 @@ def _commit_batch(catalog, tables, deltas, inserted_dates, new_max_date):
     dates from the snapshot's ``ranking_date=`` directory names. The
     last-charted state is written whenever ``ranking`` gets a new
     version or the committed state does not describe the current one."""
-    dims = {
-        "artist": tables.artist,
-        "song": tables.song,
-        "artist_song_map": tables.artist_song_map,
-    }
+    dims = {t: getattr(tables, t) for t in DIMENSIONS}
+    # Each dimension names the version it is published as (the
+    # no-change path's guard): commit_tables stages every table at its
+    # pointer + 1 (Catalog._write_version), and the writer lock the
+    # caller holds keeps the pointers where they are until then.
+    metas = {t: {PUBLISHED_AS: (catalog.current_version(t) or 0) + 1} for t in dims}
     staged = {}
     if not catalog.exists("ranking"):
         staged["ranking"] = catalog.stage_table(tables.ranking, "ranking")
@@ -351,9 +476,8 @@ def _commit_batch(catalog, tables, deltas, inserted_dates, new_max_date):
                 drop=purged,
             )
     ranking_v = staged.get("ranking", catalog.current_version("ranking"))
-    metas = None
     if ranking_v != _last_charted_version(catalog):
         dims[LAST_CHARTED] = tables.song_last_charted
-        metas = {LAST_CHARTED: {"ranking_version": ranking_v}}
+        metas[LAST_CHARTED] = {"ranking_version": ranking_v}
     catalog.commit_tables(dims, metas, staged=staged)
     return deltas

@@ -52,10 +52,22 @@ def bootstrap(spark: SparkSession, csv_dir: str, catalog: Catalog) -> None:
     key, with the song path pre-ordered ``apple_music_url NULLS LAST`` so
     the richer duplicate wins (O3/J4), and the ranking path validated
     against its CHECK constraints (F8).
+
+    Raises FileNotFoundError naming every seed file missing from
+    ``csv_dir``, before anything is written: a partial seed would load
+    empty tables without a word.
     """
+    missing = [
+        os.path.join(csv_dir, f)
+        for files in SEED_FILES.values()
+        for f in files
+        if not os.path.exists(os.path.join(csv_dir, f))
+    ]
+    if missing:
+        raise FileNotFoundError(f"missing seed files: {', '.join(missing)}")
     frames: dict[str, DataFrame] = {}
     for table, files in SEED_FILES.items():
-        paths = [os.path.join(csv_dir, f) for f in files if os.path.exists(os.path.join(csv_dir, f))]
+        paths = [os.path.join(csv_dir, f) for f in files]
         frames[table] = read_seed_csv(spark, paths, table)
 
     artist = priority_dedup(frames["artist"], schemas.ARTIST_KEY)

@@ -257,15 +257,20 @@ def test_scd2_invariants_under_random_batches(spark, data, n_batches):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @pytest.mark.slow
-@given(batches=st.lists(daily_batch(), min_size=2, max_size=4))
+@given(
+    batches=st.lists(daily_batch(), min_size=2, max_size=4),
+    again=st.integers(min_value=0, max_value=3),
+)
 def test_multi_day_replay_matches_reference_model(
-    spark, tmp_path_factory, batches
+    spark, tmp_path_factory, batches, again
 ):
     """Randomized multi-day replay vs a from-scratch pure-Python model of
     the reference's semantics (ON CONFLICT DO NOTHING inserts, per-batch
     T1 purge keyed on the max *inserted* date, T2/T3 set-level GC). The
     pipeline's final table identities must equal the model's — batch
-    count, ordering, and purge interleaving included."""
+    count, ordering, and purge interleaving included. The last batch is
+    then submitted again (an exact replay: the no-change path), and so
+    is an earlier drawn one, which may take either path."""
     wh = str(tmp_path_factory.mktemp("pbt_replay_wh"))
     cat = Catalog(spark, wh)
 
@@ -274,7 +279,7 @@ def test_multi_day_replay_matches_reference_model(
     m_map: set[tuple[str, str]] = set()
     m_ranking: dict[tuple[str, dt.date, str], int] = {}
 
-    for rows in batches:
+    for rows in [*batches, batches[-1], batches[again % len(batches)]]:
         df = spark.createDataFrame(rows, LANDING_SCHEMA)
         run_daily_batch(cat, df)
 
@@ -574,6 +579,184 @@ def test_last_charted_state_rederived_after_a_foreign_ranking_write(spark, tmp_p
     )
     assert _songs(cat) == {"ZZLEAP000000", "ZZLEAP000001", "ZZLEAP000002"}
     assert _assert_last_charted(cat)["ZZLEAP000000"] == dt.date(2024, 12, 1)
+
+
+_REPLAY_DAY = dt.date(2025, 4, 1)
+
+
+def _day_rows(day: dt.date, ns) -> list[tuple]:
+    """One chart day: song ``n`` at position ``p`` for each ``(p, n)``."""
+    return [(p, *_chart_row(day, n)[1:]) for p, n in enumerate(ns)]
+
+
+def _tables(cat: Catalog) -> dict:
+    return {
+        "artist": {r.artist_id for r in cat.read("artist").collect()},
+        "song": {r.isrc: r.apple_music_url for r in cat.read("song").collect()},
+        "artist_song_map": {
+            (r.artist_id, r.isrc) for r in cat.read("artist_song_map").collect()
+        },
+        "ranking": {
+            (r.isrc, r.ranking_date, r.rank, r.ranking_source)
+            for r in cat.read("ranking").collect()
+        },
+    }
+
+
+def _mirror_lines(mirror: str, table: str) -> list[str]:
+    import glob
+
+    lines = []
+    for f in glob.glob(f"{mirror}/{table}/part-*"):
+        with open(f) as fh:
+            lines += fh.read().splitlines()
+    return lines
+
+
+def _mirror_digest(mirror: str) -> str:
+    import hashlib
+    import os
+
+    h = hashlib.sha1()
+    for root, dirs, files in os.walk(mirror):
+        dirs.sort()
+        for f in sorted(files):
+            h.update(os.path.relpath(os.path.join(root, f), mirror).encode())
+            with open(os.path.join(root, f), "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
+
+
+def test_replay_commits_nothing_in_two_jobs(spark, tmp_path, monkeypatch):
+    """An exact replay of a committed day runs two Spark jobs (the batch
+    collect and the probe), no cascade, mirror or commit; no table gets
+    a new version and the mirror stays byte-identical. The new day's own
+    count is pinned too, so a regression on the full path shows."""
+    from daily_top_songs_etl_spark import pipeline
+    from daily_top_songs_etl_spark.pipeline import LAST_CHARTED
+    from tools.maintain_replay_bench import _job_counts
+
+    sc = spark.sparkContext
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    mirror = str(tmp_path / "mirror")
+    history = [_chart_row(_REPLAY_DAY - dt.timedelta(days=i), i) for i in range(1, 6)]
+    run_daily_batch(cat, spark.createDataFrame(history, LANDING_SCHEMA), mirror)
+
+    calls = []
+
+    def spy(owner, name):
+        real = getattr(owner, name)
+
+        def counted(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, counted)
+
+    spy(pipeline, "maintain")
+    spy(pipeline, "write_csv_mirror")
+    spy(Catalog, "commit_tables")
+    tables = ("artist", "song", "artist_song_map", "ranking", LAST_CHARTED)
+    rows = _day_rows(_REPLAY_DAY, range(100, 110))
+    counts = {}
+    for kind in ("day", "replay"):
+        calls.clear()
+        versions = {t: cat.current_version(t) for t in tables}
+        digest = _mirror_digest(mirror)
+        sc.setJobGroup(f"no-change-{kind}", kind)
+        try:
+            deltas = run_daily_batch(cat, spark.createDataFrame(rows, LANDING_SCHEMA), mirror)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts[kind] = _job_counts(sc, f"no-change-{kind}")[0]
+        unchanged = versions == {t: cat.current_version(t) for t in tables}
+        assert unchanged == (kind == "replay")
+        assert (_mirror_digest(mirror) == digest) == (kind == "replay")
+    assert calls == []
+    assert [deltas.ranking.count(), deltas.artist.count(), deltas.song_updated.count()] == [0, 0, 0]
+    assert counts == {"day": 32, "replay": 2}
+
+
+def _orphan_song(spark, cat, day_rows):
+    from daily_top_songs_etl_spark import schemas
+
+    orphan = spark.createDataFrame(
+        [("ZZORPHAN0000", "Orphan", 120000, False, "https://s/orphan", None)], schemas.SONG
+    )
+    # the writer keeps the snapshot's metadata, guard key included
+    cat.write(cat.read("song").unionByName(orphan), "song", meta=cat.read_meta("song"))
+    return day_rows
+
+
+def _second_artist(spark, cat, day_rows):
+    artists = [*day_rows[1][3], {"artist_id": "ARTNEW", "artist_name": "New Artist"}]
+    return [day_rows[0], (*day_rows[1][:3], artists, *day_rows[1][4:]), *day_rows[2:]]
+
+
+_NEW_URL = "https://music.apple.com/leap2"
+
+
+def _new_apple_url(spark, cat, day_rows):
+    return [*day_rows[:2], (*day_rows[2][:8], _NEW_URL, day_rows[2][9])]
+
+
+def _rank_eleven(spark, cat, day_rows):
+    return [*day_rows, (10, *_chart_row(_REPLAY_DAY, 5)[1:])]
+
+
+@pytest.fixture(scope="module")
+def committed_day(spark, tmp_path_factory):
+    """A catalog and mirror holding one committed day of three songs."""
+    root = tmp_path_factory.mktemp("committed_day")
+    day_rows = _day_rows(_REPLAY_DAY, range(3))
+    run_daily_batch(
+        Catalog(spark, str(root / "wh")),
+        spark.createDataFrame(day_rows, LANDING_SCHEMA),
+        str(root / "mirror"),
+    )
+    return root, day_rows
+
+
+@pytest.mark.parametrize(
+    "variant", [_orphan_song, _second_artist, _new_apple_url, _rank_eleven]
+)
+def test_replay_fallbacks_stay_exact(spark, tmp_path, committed_day, variant):
+    """A replay that is not an exact no-op takes the full path and gives
+    its results: an orphan song written by another writer is GC'd
+    (only the dimension guard catches it), a second artist of a charted
+    song and a newly known Apple Music URL are inserted, patched and
+    mirrored, and a rank-11 row leaves the tables as they were."""
+    import shutil
+
+    root, day_rows = committed_day
+    shutil.copytree(root, tmp_path / "day")
+    cat = Catalog(spark, str(tmp_path / "day" / "wh"))
+    mirror = str(tmp_path / "day" / "mirror")
+    isrcs = [f"ZZLEAP{n:06d}" for n in range(3)]
+    arts = [f"ARTLEAP{n:015d}" for n in range(3)]
+    want = {
+        "artist": set(arts),
+        "song": dict.fromkeys(isrcs),
+        "artist_song_map": set(zip(arts, isrcs)),
+        "ranking": {(i, _REPLAY_DAY, p + 1, "Spotify") for p, i in enumerate(isrcs)},
+    }
+    assert _tables(cat) == want
+
+    replay = variant(spark, cat, day_rows)
+    deltas = run_daily_batch(cat, spark.createDataFrame(replay, LANDING_SCHEMA), mirror)
+    updated = {(r.isrc, r.apple_music_url) for r in deltas.song_updated.collect()}
+    inserted = {r.isrc for r in deltas.song_inserted.collect()}
+    if variant is _second_artist:
+        want["artist"].add("ARTNEW")
+        want["artist_song_map"].add(("ARTNEW", isrcs[1]))
+        assert '"ARTNEW","New Artist"' in _mirror_lines(mirror, "artist")
+        assert f'"ARTNEW","{isrcs[1]}"' in _mirror_lines(mirror, "artist_song_map")
+    if variant is _new_apple_url:
+        want["song"][isrcs[2]] = _NEW_URL
+    assert updated == ({(isrcs[2], _NEW_URL)} if variant is _new_apple_url else set())
+    # the rank-11 row's song is inserted and mirrored, then T2 collects it
+    assert inserted == ({"ZZLEAP000005"} if variant is _rank_eleven else set())
+    assert _tables(cat) == want
 
 
 def test_daily_op_scans_do_not_grow_with_history(spark, tmp_path, monkeypatch):

@@ -5,10 +5,11 @@ shape: ``db/init.sh:228-252`` rebuilds the whole schema from flat files,
 leaving >1 year of un-purged history that the NEXT daily batch's triggers
 must reduce), then replays THREE daily batches through the real pipeline
 (``run_daily_batch`` → upsert waves → T1 retention → T2/T3 GC →
-snapshot-consistent multi-table commit) and checks the final table identities
-against a pure-Python model of the reference's trigger semantics — the
-same model as tests/test_properties.py::test_multi_day_replay, evaluated
-at scale.
+snapshot-consistent multi-table commit), then the last day's batch once
+more (an exact replay, which commits nothing), and checks the final
+table identities against a pure-Python model of the reference's trigger
+semantics — the same model as
+tests/test_properties.py::test_multi_day_replay, evaluated at scale.
 
 Scale shape (``wide``, in gen_sfx's vocabulary): R replicas of the seed's
 ~2.3-year × 2-source × top-10 history, each replica a disjoint
@@ -24,8 +25,9 @@ Usage:
 
 Prints one JSON line per R with per-day walls, per-day Spark job and
 completed-task counts (one job group per replayed day, read from the
-status tracker, so a listing or re-scan regression shows as a count)
-and the model verdict; results are hand-merged into BENCH_sf1.json
+status tracker, so a listing or re-scan regression shows as a count),
+the same three figures for the exact replay (``replay_*``) and the
+model verdict; results are hand-merged into BENCH_sf1.json
 (maintain_replay_round9).
 """
 from __future__ import annotations
@@ -184,10 +186,10 @@ def main() -> int:
                         m_ranking.add(
                             (f"I-{rep}-{di // 7}-{si}-{ri}", d, src)
                         )
-        walls, jobs, tasks = [], [], []
-        for day in replay_days:
+
+        def timed_run(day, group):
+            """(wall, jobs, tasks) of one run of ``day``'s batch."""
             df = spark.createDataFrame(_batch_rows(day), LANDING_SCHEMA)
-            group = f"maintain_replay_r{reps}_{day.isoformat()}"
             sc.setJobGroup(group, f"run_daily_batch {day.isoformat()}")
             t0 = time.perf_counter()
             try:
@@ -195,8 +197,14 @@ def main() -> int:
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setJobDescription(None)
-            walls.append(round(time.perf_counter() - t0, 3))
-            n_jobs, n_tasks = _job_counts(sc, group)
+            return (round(time.perf_counter() - t0, 3), *_job_counts(sc, group))
+
+        walls, jobs, tasks = [], [], []
+        for day in replay_days:
+            wall, n_jobs, n_tasks = timed_run(
+                day, f"maintain_replay_r{reps}_{day.isoformat()}"
+            )
+            walls.append(wall)
             jobs.append(n_jobs)
             tasks.append(n_tasks)
             # model: insert, then T1 purge at the inserted max date
@@ -209,6 +217,9 @@ def main() -> int:
                 f"SELECT add_months(date'{day.isoformat()}', -12)"
             ).first()[0]
             m_ranking = {k for k in m_ranking if k[1] > cutoff}
+        # the last day's batch once more: an exact replay, which the
+        # model leaves as it is
+        replay = timed_run(replay_days[-1], f"maintain_replay_r{reps}_again")
         # model: T2/T3 — 1:1 dims, so survivors mirror referenced isrcs
         m_songs = {k[0] for k in m_ranking}
 
@@ -247,6 +258,9 @@ def main() -> int:
                     "per_day_wall_sec": walls,
                     "per_day_jobs": jobs,
                     "per_day_tasks": tasks,
+                    "replay_wall_sec": replay[0],
+                    "replay_jobs": replay[1],
+                    "replay_tasks": replay[2],
                     "model_match": green,
                     "no_stale_dates": no_stale,
                 }
