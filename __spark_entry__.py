@@ -1209,9 +1209,8 @@ FROM per GROUP BY term
 def q_text_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental lexical-index INGEST: build on the 80% corpus slice,
     fold the held-out 20% in as TWO exactly-once batches (postings via
-    append_once FIRST — idempotent — then the one-row stats rewrite
-    with the batch marker in its meta; the sketch-stream ordering),
-    INCLUDING a replay of an applied batch, then QUERY the stored
+    append_once, the one-row stats row committed with the applied-batch
+    ledger in its meta), INCLUDING a replay of an applied batch, then QUERY the stored
     index. The oracle is the whole-corpus BM25 SQL (`bm25_topk`'s,
     reused verbatim): incremental build ≡ one-shot build down to the
     BM25 scores — a double-counted stats row or doubled postings would

@@ -691,16 +691,15 @@ class Catalog:
         multi-host TTL-lease lock with fencing tokens instead
         (:class:`_LeaseLock`).
 
-        The lock is catalog-global, not per table, and some holders keep
-        it for a corpus-scale read-modify-write: the text index append
-        and merge (``append_to_text_index``, ``merge_text_index``) and
-        the ANN index append, merge and delete (``append_to_ann_index``,
-        ``merge_ann_index``, ``delete_from_ann_index``) hold it from
-        their ledger/stats read through tokenizing or assigning the
-        batch, writing it and committing. For that whole time any other
-        writer on the same catalog — the daily batch, a matview
-        refresh, another index — gets :class:`ConcurrentWriterError`;
-        there is no wait or retry."""
+        The lock is catalog-global, not per table, and every ledgered
+        writer (``operators/ledger.apply_once``: the matviews, the text
+        and ANN index append/merge/delete, the sketch and quota streams)
+        holds it from its ledger read through staging the batch and
+        committing — for the index writers a corpus-scale
+        read-modify-write. For that whole time any other writer on the
+        same catalog — the daily batch, a matview refresh, another index
+        — gets :class:`ConcurrentWriterError`; there is no wait or
+        retry."""
         if self.lease_ttl is not None:
             return _LeaseLock(self, self.lease_ttl)
         return _WriterLock(self)
@@ -976,13 +975,13 @@ class Catalog:
 
         ``meta`` (JSON-serializable) is written as ``_meta.json`` INSIDE the
         new version directory before the pointer flip, so data + metadata
-        commit under the single pointer write — callers that need
-        transactional bookkeeping alongside the state (e.g. the
-        applied-batch ledger of ``streaming/quota_stream``) ride the same
-        atomicity instead of a second, separately-failing table write.
+        commit under the single pointer write (e.g. the sketch parameters
+        of ``streaming/sketch_stream.build_sketch_state``).
         :meth:`stage_table` and :meth:`stage_partition_delta` take the
-        same ``meta`` for :meth:`commit_tables` (the matview ledger's
-        path). Spark readers ignore ``_``-prefixed files.
+        same ``meta`` for :meth:`commit_tables`: that is how every
+        applied-batch ledger commits with its state
+        (``operators/ledger.apply_once``). Spark readers ignore
+        ``_``-prefixed files.
         """
         with self.writer_lock():
             new_v = self._write_version(df, table, meta, partition_by)

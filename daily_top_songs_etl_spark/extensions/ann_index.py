@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..operators.ledger import apply_once
 from .similarity import QUANT_SCALE, _dot, _norm, kmeans_fit, quantize_embeddings
 
 
@@ -155,7 +156,7 @@ def append_to_ann_index(
     embeddings: DataFrame,
     id_col: str = "vec_id",
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Fold a batch of NEW vectors into the persisted index WITHOUT
     retraining — the standard IVF ingest path (FAISS ``add_with_ids``
     semantics): each batch vector is assigned to its nearest STORED
@@ -174,33 +175,14 @@ def append_to_ann_index(
 
     Pass ``batch_id`` from an at-least-once caller (foreachBatch): list
     growth then goes through ``catalog.append_once`` and the occupancy
-    update is guarded by the compacted applied-batch ledger
-    (``operators/ledger`` — per-prefix high-water marks) in the centroid
-    table's meta, so a replayed batch converges to ONE copy of its rows
-    and ONE count increment (the ``append_to_dedup_index`` contract).
-    The ledger refuses ANY already-applied id, including out-of-order
-    replays of older batches (a single last-batch marker would let
-    those through and silently double-count ``n_vectors`` — the
-    round-6 ADVICE finding)."""
-    from ..operators.ledger import (
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
+    update commits with the applied-batch ledger in the centroid table's
+    meta (``operators/ledger.apply_once``), so a replayed batch, an
+    out-of-order replay of an older one included, converges to ONE copy
+    of its rows and ONE count increment. Returns False for a refused
+    replay, True once the occupancy is committed."""
+    cent_table = f"{name}__centroids"
 
-    # ONE writer lock spans the ledger check, the list append and the
-    # occupancy commit (see merge_ann_index — closes the concurrent
-    # read-occupancy → write-occupancy lost-update interleave).
-    with catalog.writer_lock():
-        cent_table = f"{name}__centroids"
-        cent_meta = catalog.read_meta(cent_table) or {}
-        led = ledger_load(cent_meta)
-        legacy = cent_meta.get("last_appended_batch")  # pre-ledger marker
-        if legacy is not None and not ledger_seen(led, legacy):
-            ledger_add(led, legacy)
-        if batch_id is not None and ledger_seen(led, batch_id):
-            return
+    def stage(meta: dict) -> dict:
         cent = _centroid_rel(catalog.read(cent_table))
         base = quantize_embeddings(embeddings).select(
             F.col(id_col).alias("vec_id"),
@@ -256,17 +238,10 @@ def append_to_ann_index(
                 ),
             )
         )
-        meta = {
-            k: v for k, v in cent_meta.items() if k != "last_appended_batch"
-        }
-        if batch_id is not None:
-            ledger_add(led, batch_id)
-        if led["count"] or led["hwm"] or led["recent"]:
-            meta.update(ledger_meta(led))
-        # the ledger commits WITH the counts under one pointer flip,
-        # AFTER the (idempotent) list append — a crash anywhere replays
-        # to the same final state
-        catalog.write(updated, cent_table, meta=meta or None)
+        staged_v = catalog.stage_table(updated, cent_table, meta=meta)
+        return {cent_table: staged_v}
+
+    return apply_once(catalog, cent_table, batch_id, stage)
 
 
 def merge_ann_index(
@@ -274,7 +249,7 @@ def merge_ann_index(
     dst: str,
     src: str,
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Fold index ``src``'s inverted lists into index ``dst`` — the
     FAISS ``merge_from`` / sharded-IVF consolidation step. The intended
     flow at scale: train the coarse quantizer ONCE (on a sample), build
@@ -298,37 +273,17 @@ def merge_ann_index(
     rather than silently producing an index whose lists disagree with
     its quantizer.
 
-    Crash/replay safety (same contract as :func:`append_to_ann_index`):
-    list growth goes through ``append_once_files`` keyed by ``batch_id``
-    (default ``"merge-{src}"`` — batch ids become snapshot file
-    names, so no URI-reserved characters) and the occupancy increment
-    commits WITH
-    the applied-batch ledger under the centroid table's pointer flip.
-    The increment is read from ``src``'s STORED occupancy — immutable
-    across replays (``src`` is never mutated), so any crash window
-    replays to the same final state."""
-    from ..operators.ledger import (
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
-
+    Exactly-once (the :func:`append_to_ann_index` contract): list growth
+    goes through ``append_once_files`` keyed by ``batch_id`` (default
+    ``"merge-{src}"`` — batch ids become snapshot file names, so no
+    URI-reserved characters) and the occupancy increment, read from
+    ``src``'s immutable STORED occupancy, commits with the ledger.
+    Returns False for a refused replay."""
     if batch_id is None:
         batch_id = f"merge-{src}"
-    # ONE writer lock spans the ledger check, the file-level append and
-    # the occupancy commit: two concurrent merges into the same dst
-    # would otherwise interleave their read-occupancy → write-occupancy
-    # steps and lose one increment (each inner call self-locks, so the
-    # interleave raises no error). Reads resolve the current version
-    # INSIDE the hold, so the occupancy we increment is the occupancy
-    # we publish against.
-    with catalog.writer_lock():
-        cent_table = f"{dst}__centroids"
-        cent_meta = catalog.read_meta(cent_table) or {}
-        led = ledger_load(cent_meta)
-        if ledger_seen(led, batch_id):
-            return
+    cent_table = f"{dst}__centroids"
+
+    def stage(meta: dict) -> dict:
         dst_cent = catalog.read(cent_table)
         src_cent = catalog.read(f"{src}__centroids")
 
@@ -390,12 +345,10 @@ def merge_ann_index(
                 "n_vectors"
             ),
         )
-        ledger_add(led, batch_id)
-        meta = {
-            k: v for k, v in cent_meta.items() if k != "last_appended_batch"
-        }
-        meta.update(ledger_meta(led))
-        catalog.write(updated, cent_table, meta=meta or None)
+        staged_v = catalog.stage_table(updated, cent_table, meta=meta)
+        return {cent_table: staged_v}
+
+    return apply_once(catalog, cent_table, batch_id, stage)
 
 
 def delete_from_ann_index(
@@ -404,7 +357,7 @@ def delete_from_ann_index(
     vec_ids: DataFrame,
     id_col: str = "vec_id",
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Remove vectors from the persisted index — the lifecycle face
     appends have had since round 6 (FAISS ``remove_ids`` semantics,
     the GDPR-erasure / retention-purge path for a vector store).
@@ -422,32 +375,16 @@ def delete_from_ann_index(
     Exactly-once: the anti-join rewrite is IDEMPOTENT (deleting
     already-absent ids is a no-op) and runs first; occupancy is then
     SET from a recount of the stored survivor lists rather than
-    decremented by delete-time counts (round-7 ADVICE medium: a crash
-    between the lists pointer flip and the centroid write replays with
-    the ids already absent, so a subtractive update would decrement by
-    zero and leave ``n_vectors`` permanently overstated — the recount
-    converges to the stored truth from ANY crash point). The recount
+    decremented by delete-time counts, so a replay whose ids are already
+    gone still converges ``n_vectors`` to the stored truth. The recount
     groups on the PARTITION column only, so parquet prunes every data
     column and the pass is footer-metadata-cheap even at full index
-    size. The applied-batch ledger still refuses a replay of a
-    COMPLETED delete batch. Works on both layouts (flat ``__lists``
-    and PQ ``__pqlists``)."""
-    from ..operators.ledger import (
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
+    size. The applied-batch ledger refuses a replay of a COMPLETED
+    delete batch (returns False). Works on both layouts (flat
+    ``__lists`` and PQ ``__pqlists``)."""
+    cent_table = f"{name}__centroids"
 
-    # ONE writer lock spans the ledger check, the partition rewrite and
-    # the occupancy recount-commit (see merge_ann_index — closes the
-    # concurrent read-modify-write interleave on the centroid table).
-    with catalog.writer_lock():
-        cent_table = f"{name}__centroids"
-        cent_meta = catalog.read_meta(cent_table) or {}
-        led = ledger_load(cent_meta)
-        if batch_id is not None and ledger_seen(led, batch_id):
-            return
+    def stage(meta: dict) -> dict:
         table = (
             f"{name}__pqlists"
             if catalog.exists(f"{name}__pqlists")
@@ -472,9 +409,8 @@ def delete_from_ann_index(
             )
         # idempotent occupancy: recount the STORED lists (post-flip
         # read) — partition-column-only aggregation, every data column
-        # pruned. Runs even when touched is empty so a crash-replay
-        # (ids already gone) still converges n_vectors to the stored
-        # truth.
+        # pruned. Runs even when touched is empty so a replay whose ids
+        # are already gone still converges n_vectors to the stored truth.
         occ = (
             catalog.read(table)
             .groupBy("cluster")
@@ -490,14 +426,9 @@ def delete_from_ann_index(
                 F.coalesce("__n", F.lit(0)).alias("n_vectors"),
             )
         )
-        meta = {
-            k: v for k, v in cent_meta.items() if k != "last_appended_batch"
-        }
-        if batch_id is not None:
-            ledger_add(led, batch_id)
-        if led["count"] or led["hwm"] or led["recent"]:
-            meta.update(ledger_meta(led))
-        catalog.write(cent, cent_table, meta=meta or None)
+        return {cent_table: catalog.stage_table(cent, cent_table, meta=meta)}
+
+    return apply_once(catalog, cent_table, batch_id, stage)
 
 
 def query_ann_index(

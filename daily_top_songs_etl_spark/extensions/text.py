@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.ledger import apply_once
+
 # Tiny high-frequency English word list for the n-gram/stopword heuristic.
 EN_STOPWORDS = [
     "the", "a", "an", "of", "and", "to", "in", "is", "it", "that",
@@ -1194,46 +1196,26 @@ def append_to_text_index(
     name: str,
     batch: DataFrame,
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Fold a batch of NEW documents into the persisted lexical index
     WITHOUT re-tokenizing the corpus: batch-sized tokenize → postings
     append → one-row stats update. Exactly-once under at-least-once
-    delivery when ``batch_id`` is passed, with the sketch-stream
-    ordering argument: the postings append goes FIRST through
-    ``catalog.append_once`` (replay converges to one copy of the
-    batch's rows — idempotent), then the non-idempotent stats update
-    rewrites the one-row ``__stats`` table with the batch marker
-    committed INSIDE its meta under the same pointer flip — a crash at
-    any point replays to exactly one fold of the batch into both
-    tables. At 100 TB this is the daily-crawl ingest path; rebuilds
-    happen on vocabulary-drift cadence (`oov_rate` is the trigger)."""
+    delivery when ``batch_id`` is passed: the postings append goes
+    through ``catalog.append_once`` (a replay converges to one copy of
+    the batch's rows) and the stats row commits with the applied-batch
+    ledger in its meta (``operators/ledger.apply_once``); returns False
+    for a refused replay. At 100 TB this is the daily-crawl ingest path;
+    rebuilds happen on vocabulary-drift cadence (`oov_rate` is the
+    trigger)."""
+    from pyspark.sql import Observation
+
     from .fanout import fan_out_small_scan
 
-    from ..operators.ledger import (
-        LEDGER_META_KEYS,
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
+    stats_t = f"{name}__stats"
 
-    # ONE writer lock spans the ledger check, the postings append and
-    # the stats commit (the merge_ann_index argument): two concurrent
-    # appends would otherwise interleave their read-stats → write-stats
-    # steps and lose one batch's counts.
-    with catalog.writer_lock():
-        stats_meta = catalog.read_meta(f"{name}__stats") or {}
-        led = ledger_load(stats_meta)
-        if batch_id is not None and ledger_seen(led, batch_id):
-            # Replay of a FULLY applied batch (the stats flip is the
-            # last step, so a seen marker proves the postings append
-            # completed too): refuse before re-tokenizing — the
-            # merge_text_index ordering. A crash BETWEEN postings
-            # append and stats flip leaves the marker unseen, so that
-            # replay still re-runs the (idempotent) postings append.
-            return
-        meta = catalog.read_meta(f"{name}__postings") or {}
-        nparts = int(meta["probe_partitions"])
+    def stage(meta: dict) -> dict:
+        pmeta = catalog.read_meta(f"{name}__postings") or {}
+        nparts = int(pmeta["probe_partitions"])
         t = tokens()
         postings = (
             fan_out_small_scan(batch)
@@ -1252,11 +1234,7 @@ def append_to_text_index(
         # (``observe`` — the build_text_index pattern): sum(tf) over
         # the rows as they flow to the staging write IS the batch's
         # sum_dl, so the batch is tokenized exactly once with no pin
-        # and no second aggregation job (the previous shape
-        # localCheckpointed the postings, then ran a separate sum over
-        # the pinned rows).
-        from pyspark.sql import Observation
-
+        # and no second aggregation job.
         obs = Observation()
         observed = postings.observe(obs, F.sum("tf").alias("sum_dl"))
         if batch_id is None:
@@ -1269,7 +1247,7 @@ def append_to_text_index(
                 observed, f"{name}__postings", batch_id,
                 partition_by=["term_mod"],
             )
-        srow = catalog.read(f"{name}__stats").first()
+        srow = catalog.read(stats_t).first()
         # n_docs stays a tokenization-free count over the batch
         # (zero-token docs carry no postings rows but still count).
         # sum_dl comes from the observation when the append executed
@@ -1277,38 +1255,22 @@ def append_to_text_index(
         # postings and stats) never ran it, so that rare path
         # re-aggregates instead of blocking on an observation that
         # will never fire.
-        drow = {
-            "n_docs": batch.count(),
-            "sum_dl": (
-                obs.get["sum_dl"]
-                if executed
-                else postings.agg(F.sum("tf")).first()[0]
-            ),
-        }
-        spark = batch.sparkSession
-        new_meta = {
-            k: v
-            for k, v in stats_meta.items()
-            if k not in LEDGER_META_KEYS and k != "applied_batches"
-        }
-        if batch_id is not None:
-            ledger_add(led, batch_id)
-        if led["count"] or led["hwm"] or led["recent"]:
-            # ledger state (possibly migrated from a legacy
-            # applied_batches list) rides the new snapshot, even on
-            # unguarded appends
-            new_meta.update(ledger_meta(led))
-        catalog.write(
-            spark.createDataFrame(
-                [(
-                    int(srow["n_docs"]) + int(drow["n_docs"]),
-                    int(srow["sum_dl"]) + int(drow["sum_dl"] or 0),
-                )],
-                "n_docs long, sum_dl long",
-            ),
-            f"{name}__stats",
-            meta=new_meta,
+        n_docs = batch.count()
+        sum_dl = (
+            obs.get["sum_dl"]
+            if executed
+            else postings.agg(F.sum("tf")).first()[0]
         )
+        stats = batch.sparkSession.createDataFrame(
+            [(
+                int(srow["n_docs"]) + int(n_docs),
+                int(srow["sum_dl"]) + int(sum_dl or 0),
+            )],
+            "n_docs long, sum_dl long",
+        )
+        return {stats_t: catalog.stage_table(stats, stats_t, meta=meta)}
+
+    return apply_once(catalog, stats_t, batch_id, stage)
 
 
 def merge_text_index(
@@ -1316,7 +1278,7 @@ def merge_text_index(
     dst: str,
     src: str,
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Fold index ``src``'s postings into index ``dst`` — the Lucene
     segment-merge shape on the catalog layout, and the lexical twin of
     ``ann_index.merge_ann_index``: tokenize each corpus shard ONCE into
@@ -1341,25 +1303,15 @@ def merge_text_index(
     both shards would double its postings; checking would cost an
     index-sized anti-join, so it is a contract, not a scan).
 
-    Crash/replay: postings ``append_once`` FIRST (idempotent), then the
-    stats rewrite with the applied-batch ledger committed INSIDE its
-    meta under the same pointer flip — the ``append_to_text_index``
-    ordering; a crash anywhere replays to exactly one fold."""
-    from ..operators.ledger import (
-        LEDGER_META_KEYS,
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
-
+    Exactly-once: the postings go through ``append_once_files`` keyed by
+    ``batch_id`` (default ``"merge-{src}"``) and the stats row commits
+    with the applied-batch ledger (``operators/ledger.apply_once``);
+    returns False for a refused replay."""
     if batch_id is None:
         batch_id = f"merge-{src}"
-    # ONE writer lock spans the ledger check, the file-level append and
-    # the stats commit (the merge_ann_index argument): two concurrent
-    # merges into dst would otherwise interleave read-stats →
-    # write-stats and lose one increment.
-    with catalog.writer_lock():
+    stats_t = f"{dst}__stats"
+
+    def stage(meta: dict) -> dict:
         dst_meta = catalog.read_meta(f"{dst}__postings") or {}
         src_meta = catalog.read_meta(f"{src}__postings") or {}
         if int(dst_meta["probe_partitions"]) != int(
@@ -1371,10 +1323,6 @@ def merge_text_index(
                 f"over {dst_meta['probe_partitions']} — stored term_mod "
                 "values are not transferable; rebuild one side"
             )
-        stats_meta = catalog.read_meta(f"{dst}__stats") or {}
-        led = ledger_load(stats_meta)
-        if ledger_seen(led, batch_id):
-            return
         # FILE-level append (``append_once_files``): src's stored
         # postings files are partition-aligned with dst's by the equal-
         # ``probe_partitions`` guard above, so the merge reuses the
@@ -1385,26 +1333,18 @@ def merge_text_index(
         catalog.append_once_files(
             f"{dst}__postings", catalog.path(f"{src}__postings"), batch_id
         )
-        drow = catalog.read(f"{dst}__stats").first()
+        drow = catalog.read(stats_t).first()
         srow = catalog.read(f"{src}__stats").first()
-        new_meta = {
-            k: v
-            for k, v in stats_meta.items()
-            if k not in LEDGER_META_KEYS and k != "applied_batches"
-        }
-        ledger_add(led, batch_id)
-        new_meta.update(ledger_meta(led))
-        catalog.write(
-            catalog.spark.createDataFrame(
-                [(
-                    int(drow["n_docs"]) + int(srow["n_docs"]),
-                    int(drow["sum_dl"]) + int(srow["sum_dl"]),
-                )],
-                "n_docs long, sum_dl long",
-            ),
-            f"{dst}__stats",
-            meta=new_meta,
+        stats = catalog.spark.createDataFrame(
+            [(
+                int(drow["n_docs"]) + int(srow["n_docs"]),
+                int(drow["sum_dl"]) + int(srow["sum_dl"]),
+            )],
+            "n_docs long, sum_dl long",
         )
+        return {stats_t: catalog.stage_table(stats, stats_t, meta=meta)}
+
+    return apply_once(catalog, stats_t, batch_id, stage)
 
 
 def compact_text_index(

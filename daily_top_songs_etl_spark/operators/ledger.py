@@ -1,19 +1,34 @@
-"""Bounded applied-batch ledger for exactly-once sinks.
+"""Applied-batch ledger and the one exactly-once write path.
 
-Every exactly-once face in the engine (the four ``operators/matview``
-states, the text-index ``__stats`` row, the ANN centroid occupancy table,
-the CMS sketch state) guards its non-idempotent update with an
-applied-batch marker carried in the snapshot's ``_meta.json`` sidecar,
-published with its state by one pointer flip (``Catalog.write``) or one
-``commit_tables`` manifest (the matviews' staged versions). The round-6
-implementations stored the FULL list of applied ids — correct, but a
-slow leak: at minute-cadence micro-batches the meta rewrite cost grows
-linearly forever (round-6 verdict, "What's wrong" #2). The single
-``last_appended_batch`` marker used by the ANN/sketch faces had the
-opposite flaw: it admitted an out-of-order REPLAY of an older batch and
-silently double-counted non-idempotent state (round-6 ADVICE medium).
+The reference gets exactly-once from one Postgres transaction around its
+upsert waves. Here every non-idempotent writer runs one protocol,
+:func:`apply_once` (stage half: :func:`stage_once`):
 
-This module is the standard streaming-sink ledger compaction:
+1. take ``catalog.writer_lock()``;
+2. load the ledger from the ledger table's ``_meta.json`` and refuse a
+   ``batch_id`` it has already applied;
+3. call the writer's ``stage(meta)``: it does its idempotent side work
+   (``append_once``, ``append_once_files``, ``overwrite_partitions``),
+   stages its tables — the ledger table with ``meta``, which carries the
+   ledger with this batch added — and returns ``{table: version}``;
+4. publish every staged table under one ``commit_tables`` manifest;
+5. release the ``localCheckpoint`` pins the stage created.
+
+State and ledger therefore become visible together or not at all: a
+crash before step 4 leaves the ledger without the batch, and its replay
+re-runs the idempotent side work and stages again. A second writer on
+the same root gets ``ConcurrentWriterError`` for the whole hold, so no
+writer commits a merge computed from a state another writer has since
+replaced. ``batch_id=None`` runs the same path unguarded (the ledger is
+carried forward unchanged).
+
+Users (ledger table in brackets): the four ``operators/matview`` views
+[the state table]; ``extensions/ann_index`` append, merge and delete
+[``__centroids``]; ``extensions/text`` append and merge [``__stats``];
+``streaming/sketch_stream`` [``__cms``, committed with ``__kmv``];
+``streaming/quota_stream`` [``__counts``].
+
+The ledger itself is compacted so meta size stays bounded:
 
 - Batch ids ending in an integer (``7``, ``b3``, ``batch-12``,
   ``stream-4`` — every in-tree caller) are split into (prefix, seq).
@@ -29,11 +44,11 @@ This module is the standard streaming-sink ledger compaction:
   of its prefix is then refused even if it was never applied — the
   bounded-reorder contract (Spark's own streaming commit log keeps only
   the last epoch, i.e. a reorder window of zero). Because such a
-  refusal can silently drop a legitimate never-applied batch (round-7
-  ADVICE low), the ledger records where each prefix's mark first
-  JUMPED over (``applied_jumped``: ``{prefix: [lo, hi]}``): a refusal
-  inside that interval is only *contractually* seen, not *provably*
-  applied, and ``ledger_seen`` logs a loud warning for it;
+  refusal can silently drop a legitimate never-applied batch, the
+  ledger records where each prefix's mark first JUMPED over
+  (``applied_jumped``: ``{prefix: [lo, hi]}``): a refusal inside that
+  interval is only *contractually* seen, not *provably* applied, and
+  ``ledger_seen`` logs a loud warning for it;
   :func:`ledger_refusal_kind` exposes the distinction (``"replay"``
   vs ``"beyond_window"``) for callers that want to raise instead.
   Outside the jumped interval, seen-ness stays exact and silent.
@@ -44,15 +59,15 @@ This module is the standard streaming-sink ledger compaction:
 
 A replay of ANY already-applied id is always refused: applied ids are
 either at-or-below the mark or exactly present in ``recent``.
-
-Legacy metas carrying the round-6 ``applied_batches`` full list are
-migrated on load (folded into the mark) and dropped on the next write.
 """
 
 from __future__ import annotations
 
 import logging
 import re
+from typing import Callable
+
+from ..pins import release_new_pins, snapshot_pins
 
 _log = logging.getLogger(__name__)
 
@@ -76,10 +91,10 @@ def _parse(batch_id: object) -> tuple[str, int] | None:
 
 
 def ledger_load(meta: dict | None) -> dict:
-    """Ledger state from a snapshot meta dict (handles None, empty, and
-    legacy round-6 ``applied_batches`` full-list metas)."""
+    """Ledger state from a snapshot meta dict (None or empty: no batch
+    applied yet)."""
     meta = meta or {}
-    led = {
+    return {
         "hwm": {k: int(v) for k, v in (meta.get("applied_hwm") or {}).items()},
         "recent": list(meta.get("applied_recent") or []),
         "count": int(meta.get("applied_count") or 0),
@@ -88,10 +103,6 @@ def ledger_load(meta: dict | None) -> dict:
             for k, v in (meta.get("applied_jumped") or {}).items()
         },
     }
-    for bid in meta.get("applied_batches") or []:  # legacy migration
-        if not ledger_seen(led, bid):
-            ledger_add(led, bid)
-    return led
 
 
 def ledger_seen(led: dict, batch_id: object) -> bool:
@@ -205,3 +216,57 @@ def ledger_meta(led: dict) -> dict:
             k: [v[0], v[1]] for k, v in led["jumped"].items()
         }
     return out
+
+
+def applied_count(catalog, table: str) -> int:
+    """Total batches ever applied to ``table``'s ledger (observability:
+    the ledger itself is compacted to per-prefix marks)."""
+    return int((catalog.read_meta(table) or {}).get("applied_count") or 0)
+
+
+def stage_once(
+    catalog,
+    table: str,
+    batch_id: object,
+    stage: Callable[[dict], dict[str, int]],
+) -> dict[str, int] | None:
+    """Steps 1-3 and 5 of the protocol (module docstring): ``stage``'s
+    ``{table: staged_version}``, or None if ``batch_id`` was already
+    applied. Nothing is published — the caller holds
+    ``catalog.writer_lock()`` across this call and its own
+    ``commit_tables(staged=...)``, so it can join other staged tables to
+    the same manifest; an uncommitted stage is re-staged by the
+    replay."""
+    with catalog.writer_lock():
+        meta = catalog.read_meta(table) or {}
+        led = ledger_load(meta)
+        if batch_id is not None:
+            if ledger_seen(led, batch_id):
+                return None
+            ledger_add(led, batch_id)
+        meta = {k: v for k, v in meta.items() if k not in LEDGER_META_KEYS}
+        if led["count"]:
+            meta.update(ledger_meta(led))
+        sc = catalog.spark.sparkContext
+        pre_pin_ids = snapshot_pins(sc)
+        try:
+            return stage(meta)
+        finally:
+            release_new_pins(sc, pre_pin_ids, f"stage_once({table!r})")
+
+
+def apply_once(
+    catalog,
+    table: str,
+    batch_id: object,
+    stage: Callable[[dict], dict[str, int]],
+) -> bool:
+    """The whole protocol (module docstring): True once ``stage``'s
+    tables are published under one ``commit_tables`` manifest, False
+    (nothing touched) if ``batch_id`` was already applied."""
+    with catalog.writer_lock():
+        staged = stage_once(catalog, table, batch_id, stage)
+        if staged is None:
+            return False
+        catalog.commit_tables({}, staged=staged)
+    return True

@@ -5,25 +5,11 @@ The reference's Postgres views recompute on read; the 100 TB analogue is
 a continuously-maintained aggregate state table plus an APPLIED-BATCH
 LEDGER for exactly-once semantics: scalar state (count/sum) is NOT
 idempotent under replay (unlike the HLL sketch state), so at-least-once
-delivery needs bookkeeping. The ledger is the compacted applied-batch
-state (``operators/ledger`` — per-prefix high-water marks, constant meta
-size across any number of batches) carried in the state snapshot's
-``_meta.json`` sidecar. It is staged INSIDE the same version directory
-as the state, so one publication makes state + ledger atomic: a crash
-at any point leaves the pointer on a snapshot whose ledger exactly
-matches its contents, and replay either re-merges onto the true
-pre-batch state or is refused.
-
-All four views run ONE refresh skeleton (:class:`_LedgeredView`), with
-the catalog's writer lock held from the ledger read to the commit:
-
-    ledger check → (partitioned) pin the delta, list the touched
-    partitions → read the state → merge → stage → ``commit_tables``
-
-Reading the ledger and the state inside the hold makes the
-read-modify-write safe: a second writer gets ``ConcurrentWriterError``
-instead of committing a batch this refresh then overwrites (and drops
-from the ledger) with a merge computed from the state before it.
+delivery needs bookkeeping. Each refresh runs the one exactly-once path
+of ``operators/ledger`` (:func:`~.ledger.apply_once`; ``stage_refresh``
+is its stage half), with the state table as the ledger table: the
+ledger check, the state read, the merge and the commit all happen under
+one writer-lock hold, and state and ledger publish together.
 
 Two algebras fill the skeleton:
 
@@ -49,14 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..pins import release_new_pins, snapshot_pins
 from .incremental import agg_state, finalize, merge_states
-from .ledger import ledger_add, ledger_load, ledger_meta, ledger_seen
+from .ledger import applied_count, apply_once, stage_once
 
 
 class _LedgeredView:
-    """The exactly-once stage-and-publish skeleton. Subclasses supply
-    the algebra — ``_delta(batch, delete)``, ``_merge(state, delta)``,
+    """The ledgered view skeleton. Subclasses supply the algebra —
+    ``_delta(batch, delete)``, ``_merge(state, delta)``,
     ``_canon(state)`` and ``read()`` — and the partitioned layout sets
     ``partition_key``."""
 
@@ -73,50 +58,37 @@ class _LedgeredView:
     def applied_count(self) -> int:
         """Total batches ever applied (ledger observability — the ledger
         itself is compacted to per-prefix high-water marks)."""
-        return ledger_load(self.catalog.read_meta(self.name))["count"]
+        return applied_count(self.catalog, self.name)
 
-    def _stage(
-        self, batch: DataFrame, batch_id: str, delete: bool = False
-    ) -> dict | None:
-        """Stage (WITHOUT publishing) one batch's merge and return
-        ``{name: staged_version}`` for ``Catalog.commit_tables(staged=...)``;
-        None if ``batch_id`` was already applied. Call under a held
-        ``catalog.writer_lock()``: the staged version carries the
-        updated ledger inside it, so nothing — the ledger included —
-        advances until the caller's ``commit_tables``, and an
-        uncommitted stage is simply re-staged by the replay."""
-        cat, pk = self.catalog, self.partition_key
-        led = ledger_load(cat.read_meta(self.name))
-        if ledger_seen(led, batch_id):
-            return None
-        exists = cat.exists(self.name)
-        if delete and not exists:
-            raise ValueError(
-                f"cannot retract from {self.name!r}: no state exists — "
-                "a delete batch can only negate previously-applied rows"
-            )
-        ledger_add(led, batch_id)
-        meta = ledger_meta(led)
-        if pk is None or not exists:
-            # whole-table write: every refresh of an unpartitioned view,
-            # and the first of a partitioned one — the delta is read once
-            state = self._delta(batch, delete)
-            if exists:
-                state = self._merge(cat.read(self.name), state)
-            staged_v = cat.stage_table(
-                self._canon(state),
-                self.name,
-                meta=meta,
-                partition_by=[pk] if pk else None,
-            )
-            return {self.name: staged_v}
-        # Pin the batch-sized delta once (consumed twice: touched-partition
-        # listing + merge). localCheckpoint blocks outlive
-        # DataFrame.unpersist(), so release exactly the RDD ids pinned
-        # here — the run_daily_batch pattern, via the shared pins helper.
-        sc = batch.sparkSession.sparkContext
-        pre_pin_ids = snapshot_pins(sc)
-        try:
+    def _stager(self, batch: DataFrame, delete: bool):
+        """The ``stage(meta)`` callback of one batch's merge: stage the
+        merged state (with ``meta``, the updated ledger) and return
+        ``{name: staged_version}``."""
+
+        def stage(meta: dict) -> dict:
+            cat, pk = self.catalog, self.partition_key
+            exists = cat.exists(self.name)
+            if delete and not exists:
+                raise ValueError(
+                    f"cannot retract from {self.name!r}: no state exists — "
+                    "a delete batch can only negate previously-applied rows"
+                )
+            if pk is None or not exists:
+                # whole-table write: every refresh of an unpartitioned
+                # view, and the first of a partitioned one — the delta is
+                # read once
+                state = self._delta(batch, delete)
+                if exists:
+                    state = self._merge(cat.read(self.name), state)
+                staged_v = cat.stage_table(
+                    self._canon(state),
+                    self.name,
+                    meta=meta,
+                    partition_by=[pk] if pk else None,
+                )
+                return {self.name: staged_v}
+            # Pin the batch-sized delta once (consumed twice: touched-
+            # partition listing + merge); the ledger path releases it.
             delta = self._delta(batch, delete).localCheckpoint(eager=True)
             touched = [
                 r[0] for r in delta.select(pk).distinct().collect()
@@ -139,29 +111,28 @@ class _LedgeredView:
                 meta=meta,
             )
             return {self.name: staged_v}
-        finally:
-            release_new_pins(
-                sc, pre_pin_ids, f"{type(self).__name__}.stage_refresh"
-            )
+
+        return stage
+
+    def _stage(
+        self, batch: DataFrame, batch_id: str, delete: bool = False
+    ) -> dict | None:
+        return stage_once(
+            self.catalog, self.name, batch_id, self._stager(batch, delete)
+        )
 
     def _refresh(
         self, batch: DataFrame, batch_id: str, delete: bool = False
     ) -> bool:
-        """:meth:`_stage` + publication under the view's own manifest,
-        the writer lock held across the pair. False (no state touched)
-        if ``batch_id`` was already applied."""
-        with self.catalog.writer_lock():
-            staged = self._stage(batch, batch_id, delete)
-            if staged is None:
-                return False
-            self.catalog.commit_tables({}, staged=staged)
-        return True
+        return apply_once(
+            self.catalog, self.name, batch_id, self._stager(batch, delete)
+        )
 
 
 class _PartitionedLayout(_LedgeredView):
     """Layout mixin of the two partitioned views: the state table is
     partitioned by ``partition_key`` (one of the group keys), which
-    routes :meth:`_LedgeredView._stage` through the partition-scoped
+    routes :meth:`_LedgeredView._stager` through the partition-scoped
     merge and adds :meth:`compact`."""
 
     def __init__(

@@ -1,5 +1,5 @@
 """localCheckpoint pin bookkeeping, shared by the batch pipeline and the
-partitioned matview.
+exactly-once ledger path (``operators/ledger.stage_once``).
 
 ``DataFrame.unpersist()`` is a no-op for localCheckpoint RDD blocks (it
 only clears CacheManager entries), so the precise way to release pins

@@ -14,21 +14,18 @@ and within a batch only on the deterministic hash order, so the whole
 history is replayable as one SQL statement (the oracle orders by
 (batch, bucket, id)).
 
-State + exactly-once protocol (two catalog tables):
+State (two catalog tables), written through the one exactly-once path
+of ``operators/ledger`` (``apply_once``) with ``{name}__counts`` as the
+ledger table:
 
 - ``{name}__admitted`` — the admitted rows, grown via
   ``catalog.append_once`` keyed by batch id: a replayed append converges
   to one copy of the batch's rows.
-- ``{name}__counts`` — one row per group (group, n_admitted), rewritten
-  each batch with the applied-batch ledger in its meta; state and ledger
-  commit under ONE pointer flip.
-
-Crash anywhere between the two commits converges: a replay finds the
-ledger without the batch (counts pointer not flipped), recomputes the
-IDENTICAL admitted set (inputs — batch rows, pre-batch counts, cap — are
-all unchanged and the ranking is deterministic), re-runs the idempotent
-append, and flips the counts. A replay arriving AFTER the counts flip is
-refused outright by the ledger, including out-of-order replays.
+- ``{name}__counts`` — one row per group (group, n_admitted), staged each
+  batch with the applied-batch ledger in its meta and published by one
+  ``commit_tables``. A replay before that commit recomputes the
+  IDENTICAL admitted set (batch rows, pre-batch counts and cap are
+  unchanged and the ranking is deterministic).
 
 Scale shape: the per-batch ranking window is batch-sized (partitioned on
 the group within the batch); the counts table is O(#groups) — the same
@@ -44,12 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..extensions.mixture import _md5_bucket64k
-from ..operators.ledger import (
-    ledger_add,
-    ledger_load,
-    ledger_meta,
-    ledger_seen,
-)
+from ..operators.ledger import apply_once
 
 
 def admit_quota_batch(
@@ -66,53 +58,44 @@ def admit_quota_batch(
     admitted rows and the updated counts are committed."""
     counts_tbl = f"{name}__counts"
     admitted_tbl = f"{name}__admitted"
-    meta = catalog.read_meta(counts_tbl) if catalog.exists(counts_tbl) else None
-    led = ledger_load(meta)
-    if ledger_seen(led, batch_id):
-        return False
 
-    spark = batch_df.sparkSession
-    if catalog.exists(counts_tbl):
-        counts = catalog.read(counts_tbl)
-    else:
-        counts = spark.createDataFrame(
-            [], f"{group_col} string, n_admitted bigint"
+    def stage(meta: dict) -> dict:
+        if catalog.exists(counts_tbl):
+            counts = catalog.read(counts_tbl)
+        else:
+            counts = batch_df.sparkSession.createDataFrame(
+                [], f"{group_col} string, n_admitted bigint"
+            )
+        w = Window.partitionBy(group_col).orderBy("hash_bucket", id_col)
+        ranked = (
+            batch_df.select(
+                F.col(group_col),
+                F.col(id_col),
+                _md5_bucket64k(id_col).alias("hash_bucket"),
+            )
+            .withColumn("__rn", F.row_number().over(w))
         )
-
-    w = Window.partitionBy(group_col).orderBy("hash_bucket", id_col)
-    ranked = (
-        batch_df.select(
-            F.col(group_col),
-            F.col(id_col),
-            _md5_bucket64k(id_col).alias("hash_bucket"),
+        admitted = (
+            ranked.join(counts, group_col, "left")
+            .withColumn("__prior", F.coalesce("n_admitted", F.lit(0)))
+            .filter(F.col("__prior") + F.col("__rn") <= cap)
+            .select(
+                group_col,
+                id_col,
+                "hash_bucket",
+                (F.col("__prior") + F.col("__rn"))
+                .cast("int")
+                .alias("admit_rank"),
+            )
         )
-        .withColumn("__rn", F.row_number().over(w))
-    )
-    admitted = (
-        ranked.join(counts, group_col, "left")
-        .withColumn("__prior", F.coalesce("n_admitted", F.lit(0)))
-        .filter(F.col("__prior") + F.col("__rn") <= cap)
-        .select(
-            group_col,
-            id_col,
-            "hash_bucket",
-            (F.col("__prior") + F.col("__rn"))
-            .cast("int")
-            .alias("admit_rank"),
+        # Pin the admitted set: it is read twice (append + counts delta)
+        # and must be one consistent answer for the replay argument.
+        admitted = admitted.localCheckpoint(eager=True)
+        catalog.append_once(admitted, admitted_tbl, batch_id)
+        delta = admitted.groupBy(group_col).agg(
+            F.count(F.lit(1)).cast("bigint").alias("__adds")
         )
-    )
-    # Pin the admitted set: it is read twice (append + counts delta) and
-    # must be one consistent answer for the crash-replay argument.
-    admitted = admitted.localCheckpoint(eager=True)
-
-    catalog.append_once(admitted, admitted_tbl, batch_id)
-
-    delta = admitted.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__adds")
-    )
-    new_counts = (
-        counts.join(delta, group_col, "full")
-        .select(
+        new_counts = counts.join(delta, group_col, "full").select(
             group_col,
             (
                 F.coalesce("n_admitted", F.lit(0))
@@ -121,10 +104,10 @@ def admit_quota_batch(
             .cast("bigint")
             .alias("n_admitted"),
         )
-    )
-    ledger_add(led, batch_id)
-    catalog.write(new_counts, counts_tbl, meta=ledger_meta(led))
-    return True
+        staged_v = catalog.stage_table(new_counts, counts_tbl, meta=meta)
+        return {counts_tbl: staged_v}
+
+    return apply_once(catalog, counts_tbl, batch_id, stage)
 
 
 def run_quota_admission_stream(

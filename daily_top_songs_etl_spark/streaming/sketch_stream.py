@@ -3,21 +3,14 @@ folded forward per micro-batch, exactly-once.
 
 Frequency (count-min) and distinct (k-minimum-values) summaries are the
 statistics a pipeline keeps PER HOUR and merges on read — both are
-monoids, so continuous maintenance is just "sketch the batch, merge,
-commit". What needs care is the commit under foreachBatch's
-at-least-once contract:
-
-- **KMV merge is naturally idempotent** — the merged sketch is the
-  min-k of a distinct union, so folding the same batch twice yields the
-  same set. It is therefore merged FIRST and left unguarded.
-- **CMS merge is NOT idempotent** (cell-wise addition double-counts a
-  replay), so the processed-batch marker commits INSIDE the CMS
-  table's ``_meta.json`` under the catalog's single pointer flip:
-  marker and merged counters become visible atomically, and the
-  marker check at the top of :func:`merge_sketch_batch` makes a replay
-  a no-op. A crash after the KMV write but before the CMS flip replays
-  as: KMV re-merge (idempotent, same result) + CMS merge (first time)
-  — converging to exactly one fold of the batch into both tables.
+mergeable summaries, so continuous maintenance is just "sketch the
+batch, merge, commit". The commit is the one exactly-once path of
+``operators/ledger`` (``apply_once``): both merged tables stage under
+one writer-lock hold and publish under one ``commit_tables`` manifest,
+with the applied-batch ledger in the CMS table's ``_meta.json``. CMS
+cell-wise addition is not idempotent, so the ledger refusing a replay is
+what keeps the counters exact; a crash before the commit leaves both
+tables and the ledger as they were.
 
 Scale shape: per batch, one map-side-combinable sketch build over the
 batch rows, a merge against ``depth·width`` (CMS) / ``k`` (KMV) stored
@@ -31,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..operators.heavyhitters import cms_build, kmv_sketch
+from ..operators.ledger import apply_once
 
 
 def build_sketch_state(
@@ -53,27 +47,9 @@ def build_sketch_state(
             "depth": depth,
             "kmv_k": kmv_k,
             "key_col": col,
-            "last_merged_batch": None,
         },
     )
     catalog.write(kmv_sketch(items, col, k=kmv_k), f"{name}__kmv")
-
-
-def _merge_kmv(
-    catalog: Catalog, name: str, batch: DataFrame, col: str, kmv_k: int
-) -> None:
-    # No pin: the relation is referenced exactly once (the write), and
-    # the versioned catalog makes read-then-overwrite safe — the write
-    # stages v+1 while the plan reads v, so the single write action is
-    # the one and only execution of this lineage.
-    merged = (
-        catalog.read(f"{name}__kmv")
-        .unionByName(kmv_sketch(batch, col, k=kmv_k))
-        .distinct()
-        .orderBy("hv")
-        .limit(kmv_k)
-    )
-    catalog.write(merged, f"{name}__kmv")
 
 
 def merge_sketch_batch(
@@ -81,46 +57,40 @@ def merge_sketch_batch(
     name: str,
     batch: DataFrame,
     batch_id: int | str | None = None,
-) -> None:
+) -> bool:
     """Fold one micro-batch into the persisted sketch state. With a
-    ``batch_id``, replays converge to exactly one fold (see module
-    docstring for the ordering argument). The guard is the compacted
-    applied-batch ledger (``operators/ledger``): any already-applied id
-    is refused, including an out-of-order replay of an OLDER batch —
-    the single last-batch marker this replaces would have let one
-    through and double-counted the (non-idempotent) CMS counters."""
-    from ..operators.ledger import (
-        ledger_add,
-        ledger_load,
-        ledger_meta,
-        ledger_seen,
-    )
+    ``batch_id``, the compacted applied-batch ledger refuses any
+    already-applied id, an out-of-order replay of an older batch
+    included. Returns False (nothing touched) for a refused replay,
+    True once both tables are committed."""
+    cms_t, kmv_t = f"{name}__cms", f"{name}__kmv"
 
-    meta = catalog.read_meta(f"{name}__cms") or {}
-    led = ledger_load(meta)
-    legacy = meta.get("last_merged_batch")  # pre-ledger marker
-    if legacy is not None and not ledger_seen(led, legacy):
-        ledger_add(led, legacy)
-    if batch_id is not None and ledger_seen(led, batch_id):
-        return
-    col = meta["key_col"]
-    width, depth, kmv_k = meta["width"], meta["depth"], meta["kmv_k"]
-    # KMV first: idempotent under replay, needs no marker.
-    _merge_kmv(catalog, name, batch, col, kmv_k)
-    # Single-reference like the KMV merge above — the write executes the
-    # union+fold once against the still-current version; no pin needed.
-    merged_cms = (
-        catalog.read(f"{name}__cms")
-        .unionByName(cms_build(batch, col, width=width, depth=depth))
-        .groupBy("i", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    new_meta = {k: v for k, v in meta.items() if k != "last_merged_batch"}
-    if batch_id is not None:
-        ledger_add(led, batch_id)
-    if led["count"] or led["hwm"] or led["recent"]:
-        new_meta.update(ledger_meta(led))
-    catalog.write(merged_cms, f"{name}__cms", meta=new_meta)
+    def stage(meta: dict) -> dict:
+        col, kmv_k = meta["key_col"], meta["kmv_k"]
+        # No pins: each merge is referenced once (its staged write), and
+        # staging v+1 while the plan reads v is safe in the versioned
+        # catalog.
+        kmv = (
+            catalog.read(kmv_t)
+            .unionByName(kmv_sketch(batch, col, k=kmv_k))
+            .distinct()
+            .orderBy("hv")
+            .limit(kmv_k)
+        )
+        cms = (
+            catalog.read(cms_t)
+            .unionByName(
+                cms_build(batch, col, width=meta["width"], depth=meta["depth"])
+            )
+            .groupBy("i", "bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+        )
+        return {
+            kmv_t: catalog.stage_table(kmv, kmv_t),
+            cms_t: catalog.stage_table(cms, cms_t, meta=meta),
+        }
+
+    return apply_once(catalog, cms_t, batch_id, stage)
 
 
 def run_sketch_stream(

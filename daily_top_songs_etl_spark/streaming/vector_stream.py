@@ -13,9 +13,9 @@ codebook, no retraining).
 Replay safety: foreachBatch is at-least-once; `append_to_ann_index`
 with a ``batch_id`` is exactly-once by construction — list growth goes
 through ``catalog.append_once`` (idempotent per batch id) and the
-occupancy update is guarded by a marker committed WITH the counts under
-the centroid table's single pointer flip. No separate marker ledger is
-needed; the index tables carry their own.
+occupancy update commits with the applied-batch ledger in the centroid
+table's meta (``operators/ledger.apply_once``). No separate marker
+ledger is needed; the index tables carry their own.
 
 Scale shape: per-batch work is O(batch · k) for assignment plus the
 batch-sized append; nothing scales with the stored corpus. Queries

@@ -152,14 +152,6 @@ def test_ledger_non_numeric_ids_exact():
     assert "bootstrap" in ledger_meta(led)["applied_recent"]
 
 
-def test_ledger_migrates_legacy_applied_batches_list():
-    """Round-6 metas carry the full applied_batches list; loading one
-    folds it into marks and the next ledger_meta drops the list."""
-    led = ledger_load({"applied_batches": ["b1", "b2", "b3"]})
-    assert ledger_seen(led, "b2") and not ledger_seen(led, "b4")
-    assert "applied_batches" not in ledger_meta(led)
-
-
 def test_incremental_view_meta_bounded_and_old_replay_refused(
     spark, tmp_path
 ):
@@ -250,3 +242,102 @@ def test_ann_append_out_of_order_replay_keeps_occupancy(spark, tmp_path):
         .collect()
     }
     assert n_after == {c: n0[c] + grown.get(c, 0) for c in n0}
+
+
+def test_ledger_steps_run_only_inside_the_locked_helper():
+    """The exactly-once protocol has one implementation: outside the
+    unit tests of the ledger itself, ``ledger_load``/``ledger_seen``/
+    ``ledger_add``/``ledger_meta`` are called only by
+    ``operators/ledger.stage_once``, inside its ``writer_lock()`` block.
+    A writer that checks or writes a ledger by hand fails here."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "__spark_entry__.py", root / "bench.py"]
+    for d in ("daily_top_songs_etl_spark", "tools", "perfbench"):
+        files += sorted((root / d).rglob("*.py"))
+    steps = {"ledger_load", "ledger_seen", "ledger_add", "ledger_meta"}
+    calls = set()
+
+    def name(call):
+        return getattr(call.func, "id", None) or getattr(
+            call.func, "attr", None
+        )
+
+    class Calls(ast.NodeVisitor):
+        """Record (file, innermost enclosing function, inside a
+        ``with ...writer_lock()``) per step call."""
+
+        def __init__(self, rel: str):
+            self.rel, self.fn, self.locked = rel, "<module>", False
+
+        def visit_FunctionDef(self, node):
+            outer = self.fn, self.locked
+            self.fn, self.locked = node.name, False
+            self.generic_visit(node)
+            self.fn, self.locked = outer
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_With(self, node):
+            outer = self.locked
+            self.locked |= any(
+                isinstance(it.context_expr, ast.Call)
+                and name(it.context_expr) == "writer_lock"
+                for it in node.items
+            )
+            self.generic_visit(node)
+            self.locked = outer
+
+        def visit_Call(self, node):
+            if name(node) in steps:
+                calls.add((self.rel, self.fn, self.locked))
+            self.generic_visit(node)
+
+    for path in files:
+        Calls(str(path.relative_to(root))).visit(ast.parse(path.read_text()))
+    assert calls == {
+        ("daily_top_songs_etl_spark/operators/ledger.py", "stage_once", True)
+    }
+
+
+def test_ledgered_writers_leave_no_pins(spark, tmp_path):
+    """The ledger path releases the localCheckpoint pins a stage
+    creates: K quota batches and K ANN appends in one session leave no
+    persisted RDD behind (a long-lived stream would otherwise hold one
+    pinned batch per micro-batch)."""
+    from conftest import TESTDATA
+
+    from daily_top_songs_etl_spark.catalog import Catalog
+    from daily_top_songs_etl_spark.extensions.ann_index import (
+        append_to_ann_index,
+        build_ann_index,
+    )
+    from daily_top_songs_etl_spark.pins import snapshot_pins
+    from daily_top_songs_etl_spark.streaming.quota_stream import (
+        admit_quota_batch,
+    )
+
+    emb = spark.read.parquet(f"{TESTDATA}/embeddings.parquet").filter(
+        F.col("vec_id") < 60
+    )
+    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet")
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    build_ann_index(
+        cat, "idx", emb.filter(F.col("vec_id") % 4 != 0), n_centroids=2,
+        iters=1,
+    )
+    sc = spark.sparkContext
+    before = snapshot_pins(sc)
+    k = 3
+    for i in range(k):
+        assert admit_quota_batch(
+            cat, "q", docs.filter(F.col("doc_id") % k == i), batch_id=i,
+            cap=5,
+        )
+        held = emb.filter(F.col("vec_id") % 4 == 0)
+        assert append_to_ann_index(
+            cat, "idx", held.filter(F.col("vec_id") % k == i), batch_id=i
+        )
+    assert snapshot_pins(sc) - before == set()

@@ -782,43 +782,199 @@ def test_retractable_view_deletes_and_exactly_once(spark, tmp_path):
     }["b"] == 3.0
 
 
-@pytest.mark.parametrize("view_cls", ["IncrementalView", "RetractableView"])
-def test_matview_refresh_keeps_a_concurrent_commit(spark, tmp_path, view_cls):
-    """Two Catalog instances on one root: writer ``b`` tries to commit
-    while ``a`` is between reading the view state and writing its merge.
-    ``b`` must either be refused with ConcurrentWriterError or have its
-    batch survive; a merge computed from the state before ``b``'s
-    commit must never overwrite it (and drop its id from the ledger)."""
-    from daily_top_songs_etl_spark.catalog import Catalog, ConcurrentWriterError
+#: contending batch i carries _SIZES[i] rows, so a sum of sizes names the
+#: set of batches a state holds
+_SIZES = (1, 2, 4)
+_BASE = list(range(10, 40))  # ids of the rows an index is built from
+
+
+def _ids(i):
+    """Row ids of contending batch ``i`` (disjoint across batches)."""
+    lo = sum(_SIZES[:i])
+    return list(range(lo, lo + _SIZES[i]))
+
+
+def _contending_writer(spark, cat, kind):
+    """Set up ``kind``'s state on ``cat`` and return ``(write, summary,
+    want, ledger_table)``: ``write(catalog, i)`` applies batch ``i``
+    through that catalog; ``summary(catalog)`` describes the stored
+    state; ``want(applied)`` is the summary when exactly the batches in
+    ``applied`` are in it."""
+    from conftest import TESTDATA
+
+    from daily_top_songs_etl_spark.extensions import ann_index, text
     from daily_top_songs_etl_spark.operators import matview
+    from daily_top_songs_etl_spark.streaming.quota_stream import (
+        admit_quota_batch,
+    )
+    from daily_top_songs_etl_spark.streaming.sketch_stream import (
+        build_sketch_state,
+        merge_sketch_batch,
+    )
+
+    def n(applied):
+        return sum(_SIZES[i] for i in applied)
+
+    def rows(table, ids):
+        key = "vec_id" if table == "embeddings" else "doc_id"
+        df = spark.read.parquet(f"{TESTDATA}/{table}.parquet")
+        return df.filter(F.col(key).isin(ids))
+
+    def occupancy(c):
+        occ = c.read("idx__centroids").agg(F.sum("n_vectors")).first()[0]
+        return (c.read("idx__lists").count(), occ)
+
+    def text_docs(c):
+        return (
+            c.read("tx__stats").first()["n_docs"],
+            c.read("tx__postings").select("doc_id").distinct().count(),
+        )
+
+    def grown(applied):
+        """An index's (rows, count) after the batches in ``applied``."""
+        k = len(_BASE) + (-1 if kind == "ann_delete" else 1) * n(applied)
+        return (k, k)
+
+    if kind in ("IncrementalView", "RetractableView"):
+        cls = getattr(matview, kind)
+
+        def write(c, i):
+            batch = spark.createDataFrame(
+                [("x", 1.0)] * _SIZES[i], "k string, v double"
+            )
+            return cls(c, "mv", ["k"], "v").refresh(batch, f"b{i}")
+
+        def summary(c):
+            r = cls(c, "mv", ["k"], "v").read().first()
+            return (r.n_rows, r.sum_value)
+
+        return write, summary, lambda a: (n(a), float(n(a))), "mv"
+    if kind == "sketch":
+        seed = spark.createDataFrame([(1000,)], "k long")
+        build_sketch_state(cat, "sk", seed, "k", width=64, depth=2, kmv_k=16)
+
+        def write(c, i):
+            batch = spark.createDataFrame([(x,) for x in _ids(i)], "k long")
+            return merge_sketch_batch(c, "sk", batch, batch_id=i)
+
+        def summary(c):
+            cms = c.read("sk__cms").filter("i = 0").agg(F.sum("cnt"))
+            return (cms.first()[0], c.read("sk__kmv").count())
+
+        return write, summary, lambda a: (1 + n(a), 1 + n(a)), "sk__cms"
+    if kind == "quota":
+
+        def write(c, i):
+            batch = spark.createDataFrame(
+                [(x, "s") for x in _ids(i)], "doc_id long, source string"
+            )
+            return admit_quota_batch(c, "q", batch, batch_id=i, cap=100)
+
+        def summary(c):
+            total = c.read("q__counts").agg(F.sum("n_admitted")).first()[0]
+            return (c.read("q__admitted").count(), total)
+
+        return write, summary, lambda a: (n(a), n(a)), "q__counts"
+    if kind.startswith("ann_"):
+        ann_index.build_ann_index(
+            cat, "idx", rows("embeddings", _BASE), n_centroids=2, iters=1
+        )
+        if kind == "ann_append":
+
+            def write(c, i):
+                return ann_index.append_to_ann_index(
+                    c, "idx", rows("embeddings", _ids(i)), batch_id=i
+                )
+
+        elif kind == "ann_merge":
+            quant = cat.read("idx__centroids").select("cluster", "centroid")
+            for i in range(3):
+                ann_index.build_ann_index(
+                    cat, f"s{i}", rows("embeddings", _ids(i)),
+                    centroids=quant,
+                )
+
+            def write(c, i):
+                return ann_index.merge_ann_index(c, "idx", f"s{i}")
+
+        else:
+
+            def write(c, i):
+                doomed = rows("embeddings", [_BASE[0] + x for x in _ids(i)])
+                return ann_index.delete_from_ann_index(
+                    c, "idx", doomed, batch_id=i
+                )
+
+        return write, occupancy, grown, "idx__centroids"
+    text.build_text_index(
+        cat, "tx", rows("documents", _BASE), probe_partitions=4
+    )
+    if kind == "text_append":
+
+        def write(c, i):
+            return text.append_to_text_index(
+                c, "tx", rows("documents", _ids(i)), batch_id=i
+            )
+
+    else:
+        for i in range(3):
+            text.build_text_index(
+                cat, f"s{i}", rows("documents", _ids(i)), probe_partitions=4
+            )
+
+        def write(c, i):
+            return text.merge_text_index(c, "tx", f"s{i}")
+
+    return write, text_docs, grown, "tx__stats"
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "IncrementalView",
+        "RetractableView",
+        "sketch",
+        "quota",
+        "ann_append",
+        "ann_merge",
+        "ann_delete",
+        "text_append",
+        "text_merge",
+    ],
+)
+def test_matview_refresh_keeps_a_concurrent_commit(spark, tmp_path, writer):
+    """Two Catalog instances on one root, for every ledgered writer:
+    writer ``b`` tries to commit while ``a`` is between reading its state
+    and committing its merge. ``b`` must either be refused with
+    ConcurrentWriterError or have its batch survive in the state AND the
+    ledger; a merge computed from the state before ``b``'s commit must
+    never overwrite it (and drop its id from the ledger)."""
+    from daily_top_songs_etl_spark.catalog import Catalog, ConcurrentWriterError
+    from daily_top_songs_etl_spark.operators.ledger import applied_count
 
     root = str(tmp_path / "wh")
-    cls = getattr(matview, view_cls)
-    a = cls(Catalog(spark, root), "mv", ["k"], "v")
-    b = cls(Catalog(spark, root), "mv", ["k"], "v")
-
-    def batch(v):
-        return spark.createDataFrame([("x", v)], "k string, v double")
-
-    assert a.refresh(batch(1.0), "b0")
-    real_read, interleaved, refused = a.catalog.read, [], []
+    a, b = Catalog(spark, root), Catalog(spark, root)
+    write, summary, want, ledger_table = _contending_writer(spark, a, writer)
+    assert write(a, 0)
+    interleaved, refused = [], []
 
     def read_then_commit_b(table):
-        df = real_read(table)
+        df = Catalog.read(a, table)
         if not interleaved:
             interleaved.append(table)
             try:
-                b.refresh(batch(2.0), "b1")
+                write(b, 1)
             except ConcurrentWriterError:
                 refused.append(table)
         return df
 
-    a.catalog.read = read_then_commit_b
-    assert a.refresh(batch(4.0), "b2")
+    a.read = read_then_commit_b
+    assert write(a, 2)
     assert interleaved
-    got = {r.k: (r.n_rows, r.sum_value) for r in a.read().collect()}
-    assert got == ({"x": (2, 5.0)} if refused else {"x": (3, 7.0)})
-    assert a.applied_count() == (2 if refused else 3)
+    del a.read
+    applied = {0, 2} if refused else {0, 1, 2}
+    assert summary(a) == want(applied)
+    assert applied_count(a, ledger_table) == len(applied)
 
 
 def test_lsh_recall_stats_bounds_and_planted_dups(spark):

@@ -873,14 +873,15 @@ def test_vector_ingest_stream_grows_index_exactly_once(spark, tmp_path):
         )
 
 
-def test_sketch_stream_exactly_once_and_merge_identity(spark, tmp_path):
+def test_sketch_stream_exactly_once_and_merge_identity(
+    spark, tmp_path, monkeypatch
+):
     from daily_top_songs_etl_spark.catalog import Catalog
     from daily_top_songs_etl_spark.operators.heavyhitters import (
         cms_build,
         kmv_sketch,
     )
     from daily_top_songs_etl_spark.streaming.sketch_stream import (
-        _merge_kmv,
         build_sketch_state,
         merge_sketch_batch,
     )
@@ -893,15 +894,28 @@ def test_sketch_stream_exactly_once_and_merge_identity(spark, tmp_path):
     b2 = whole.filter(F.col("k") % 3 == 2)
     cat = Catalog(spark, str(tmp_path / "wh"))
     build_sketch_state(cat, "st", seed, "k", width=512, depth=4, kmv_k=128)
-    merge_sketch_batch(cat, "st", b1, batch_id=1)
-    # replay of batch 1 must be a no-op (marker in the CMS meta)
+    assert merge_sketch_batch(cat, "st", b1, batch_id=1)
+    # replay of batch 1 must be a no-op (ledger in the CMS meta)
     v_cms = cat.current_version("st__cms")
-    merge_sketch_batch(cat, "st", b1, batch_id=1)
+    v_kmv = cat.current_version("st__kmv")
+    assert not merge_sketch_batch(cat, "st", b1, batch_id=1)
     assert cat.current_version("st__cms") == v_cms
-    # crash window: KMV merged but CMS flip never happened — replay
-    # converges to exactly one fold of batch 2 into both tables
-    _merge_kmv(cat, "st", b2, "k", 128)
-    merge_sketch_batch(cat, "st", b2, batch_id=2)
+    # crash window: both merges staged, the commit never happens —
+    # neither table moves, and the replay folds batch 2 exactly once
+    seen = []
+
+    def crash(dfs, staged=None, **kw):
+        seen.append(set(staged or {}))
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(cat, "commit_tables", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        merge_sketch_batch(cat, "st", b2, batch_id=2)
+    monkeypatch.undo()
+    assert seen == [{"st__cms", "st__kmv"}]
+    assert cat.current_version("st__cms") == v_cms
+    assert cat.current_version("st__kmv") == v_kmv
+    assert merge_sketch_batch(cat, "st", b2, batch_id=2)
     got_cms = {(r.i, r.bucket): r.cnt for r in cat.read("st__cms").collect()}
     want_cms = {
         (r.i, r.bucket): r.cnt
